@@ -24,11 +24,11 @@ import graft.streaming.VersionedState
 
 spark.sparkContext.setLogLevel("WARN")
 spark.conf.set("spark.sql.streaming.stateStore.providerClass", "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-// retention-enabled ledgers: a consumer that captured a segment path just
-// before expireSegments' atomic rename must treat the stat miss as a skip,
-// not a stream-killing error. topicStream sets the per-source
-// ignoreMissingFiles itself; the session conf additionally covers any
-// ad-hoc batch read over the ledger this script might do
+// retention-enabled ledgers: a read that captured a segment path just
+// before expireSegments' atomic rename must treat the miss as a skip, not
+// a stream-killing error. The ledger consumers (topicStream) set
+// ignoreMissingFiles on their own per-batch scan; the session conf covers
+// any ad-hoc batch read over the ledger this script might do
 spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
 
 implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -44,8 +44,8 @@ val days = sys.env.getOrElse("SOAK_DAYS", "300").toInt
 require(days >= 12, s"SOAK_DAYS=$days too short: the quarter-median verdict gates need samples in both the 2nd and 4th quarters")
 val midsPerDay = 50
 // Ledger segment retention (Kafka.expireSegments), the r14 knob for the
-// one non-plateau the first soak measured: without it the file-stream
-// consumers list O(committed segments) per trigger forever. Keep a
+// one non-plateau the first soak measured: without it every ledger poll
+// lists O(committed segments) forever. Keep a
 // 7-version horizon -- every consumer is drained to current each day, so
 // the horizon is far beyond the max consumer lag (the Kafka contract).
 // SOAK_RETAIN=0 reproduces the unpruned baseline.
@@ -182,8 +182,8 @@ val md = s"""# SOAK -- layered-chain streaming soak (round 14)
 |
 |The first (r14, pre-retention) soak measured one non-plateau: per-day
 |wall grew super-linearly with stream age because the ledger's
-|file-stream consumers list O(committed segments) files per trigger and
-|nothing pruned segments. That knob is now CODE -- `Kafka.expireSegments`
+|consumers (then file-stream sources) listed O(committed segments) files
+|per trigger and nothing pruned segments. That knob is now CODE -- `Kafka.expireSegments`
 |(the Kafka topic-retention analogue; hwm-guarded so the exactly-once
 |replay-skip survives expiry, LedgerRetentionSpec) -- and this soak
 |applies it daily, gating the per-day wall median alongside the state

@@ -29,14 +29,14 @@ import graft.streaming.VersionedState
   *   dwd_page_log   ─[dwdLogsToKeywordState: tokenize+count]→ keyword state
   *   states ─[publishDws]→ warehouse DWS tables → [[Serve]]
   *
-  * Consumers read the ledger through Spark's file stream source over the
-  * committed segment layout (a `v=N` glob pinned to one `topic=<t>`
-  * partition dir): new segments appear
-  * exactly when their producer's parquet job commits, so segment
-  * visibility matches [[Kafka.readCommitted]]'s rule under the crash
-  * windows the spec exercises; a replayed producer batch is skipped by
-  * the ledger before any file lands, so downstream sources never see a
-  * duplicate. State merges are [[VersionedState]] transactions — the
+  * Consumers read the ledger through [[graft.sources.LedgerSource]],
+  * whose offset is the highest committed segment version holding its
+  * topic: a segment becomes visible only once its `_SUCCESS` marker
+  * exists (after the producer's parquet job commits), the same rule as
+  * [[Kafka.readCommitted]], so a crash's half-written segment is never
+  * read and its replay arrives exactly once. A replayed producer batch
+  * whose segment already committed is skipped by the ledger before any
+  * file lands. State merges are [[VersionedState]] transactions — the
   * replay-safe upsert every foreachBatch merge in this repo rides.
   */
 object LayeredPipeline {
@@ -56,21 +56,14 @@ object LayeredPipeline {
         col("value")),
       dwdLedger, checkpoint).start()
 
-  /** Streaming consumer over one topic of a ledger: Spark's file stream
-    * source on the committed segment dirs (schema is the K2 value
-    * column; `topic` is the partition dir the glob pins). Sets the
-    * per-source `ignoreMissingFiles` (FileSourceOptions) because a
-    * ledger may be under retention ([[Kafka.expireSegments]]): a
-    * segment path captured by the per-trigger glob just before the
-    * expiry rename is a clean whole-dir stat miss the consumer must
-    * skip, not die on — retention's contract already guarantees the
-    * horizon exceeds consumer lag, so a skipped path is always an
-    * already-consumed segment, never data loss. */
+  /** Streaming consumer over one topic of a ledger: the
+    * [[graft.sources.LedgerSource]] offset-tracking consumer, one
+    * `value STRING` column per record. It sees a segment only once its
+    * producer committed it, and a retention expiry racing its scan is
+    * skipped, not fatal ([[Kafka.expireSegments]]). */
   def topicStream(s: SparkSession, ledger: String, topic: String): DataFrame =
-    s.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL("value STRING"))
-      .option("ignoreMissingFiles", "true")
-      .parquet(s"$ledger/v=*/topic=$topic")
+    s.readStream.format(classOf[graft.sources.LedgerSourceProvider].getName)
+      .option("topic", topic).load(ledger)
 
   /** DWD→DWM: the OrderWideApp hop — parse the order fact, enrich with a
     * per-batch broadcast dim snapshot (J3's lookup-join shape), stamp the
@@ -103,7 +96,7 @@ object LayeredPipeline {
 
   /** Typed visit-log stream off the DWD ledger: parse + 0-delay
     * watermark. Sentinel rows (they exist only to push the watermark
-    * past real data — the MemoryStream/file-source analogue of a live
+    * past real data — the MemoryStream/ledger-source analogue of a live
     * stream's continuous arrivals) are NOT dropped here: a `mid`
     * predicate doesn't reference the watermark column, so Catalyst's
     * PushPredicateThroughNonJoin would move it BELOW the
@@ -180,9 +173,7 @@ object LayeredPipeline {
       .unionByName(dayRows(jumpLedger, "dwm_user_jump", 0, 1))
       .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
         VersionedState.applyBatch(s, stateDir, id, b, emptyVisitor(s),
-          (st, bt) => st.unionByName(
-              bt.groupBy(col("day")).agg(sum(col("uv_ct")).as("uv_ct"),
-                sum(col("uj_ct")).as("uj_ct")))
+          (st, bt) => st.unionByName(bt)
             .groupBy(col("day")).agg(sum(col("uv_ct")).as("uv_ct"),
               sum(col("uj_ct")).as("uj_ct")))
         (): Unit
@@ -216,10 +207,9 @@ object LayeredPipeline {
       .select(col("r.*"))
       .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
         VersionedState.applyBatch(s, stateDir, id, b, emptyGmv(s),
-          (st, bt) => st.unionByName(
-              bt.groupBy(col("day")).agg(
-                sum(col("o_totalprice")).cast("decimal(38,2)").as("gmv"),
-                count(lit(1)).as("order_ct")))
+          (st, bt) => st.unionByName(bt.select(col("day"),
+              col("o_totalprice").cast("decimal(38,2)").as("gmv"),
+              lit(1L).as("order_ct")))
             .groupBy(col("day")).agg(
               sum(col("gmv")).cast("decimal(38,2)").as("gmv"),
               sum(col("order_ct")).as("order_ct")))
@@ -243,8 +233,8 @@ object LayeredPipeline {
         .as("keyword"))
       .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
         VersionedState.applyBatch(s, stateDir, id, b, emptyKw(s),
-          (st, bt) => st.unionByName(
-              bt.groupBy(col("keyword")).agg(count(lit(1)).as("ct")))
+          (st, bt) => st.unionByName(bt.select(col("keyword"),
+              lit(1L).as("ct")))
             .groupBy(col("keyword")).agg(sum(col("ct")).as("ct")))
         (): Unit
       }.option("checkpointLocation", checkpoint).start()

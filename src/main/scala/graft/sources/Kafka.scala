@@ -136,8 +136,8 @@ object Kafka {
 
   /** Ledger segment retention — the Kafka topic-retention analogue
     * (the reference's topics carry time-based retention; without it the
-    * file-stream consumers over this ledger list O(committed segments)
-    * per trigger forever — the one measured non-plateau in SOAK.md).
+    * ledger's disk, and the root listing every [[LedgerSource]] poll and
+    * [[txnProduce]] makes, grow with every segment ever committed).
     *
     * Deletes committed segments with version < `keepFrom`, first
     * recording the highest expired version in a `_retention_hwm` marker
@@ -147,23 +147,22 @@ object Kafka {
     * segments survive — never a lost hwm with deleted data.
     *
     * Contract (exactly Kafka's): retention must exceed the maximum
-    * consumer lag. A file-stream consumer restarting from its checkpoint
-    * re-reads only its last in-flight batch's files, which the contract
-    * keeps inside the horizon; a consumer lagging past the horizon loses
-    * data, as it would on a retention-expired Kafka topic.
+    * consumer lag. A [[LedgerSource]] consumer restarting from its
+    * checkpoint re-reads only its last in-flight version range, which the
+    * contract keeps inside the horizon; a consumer lagging past the
+    * horizon loses data, as it would on a retention-expired Kafka topic.
     *
     * Deletion is rename-then-delete, Kafka's own discipline (brokers
     * rename a segment `.deleted` and remove it after a delay so in-flight
     * reads never see a half-deleted file): recursively deleting `v=N` in
-    * place races LIVE consumers' per-trigger glob walks — a directory
-    * captured by the root listing and statted mid-delete surfaces as
-    * AccessDenied/half-listed (observed: the first retention-enabled soak
-    * killed its UV consumer exactly this way). The atomic rename to a
-    * dot-prefixed name flips visibility in one filesystem op — Spark's
-    * hidden-path filter (`.`/`_` prefixes) excludes it from every source
-    * listing, a `v=*` glob no longer matches it, and a stat of the old
-    * path is a clean whole-dir miss the glob walk skips — after which the
-    * physical delete proceeds with no reader able to walk in.
+    * place races LIVE readers' scans — a directory captured by a listing
+    * and walked mid-delete surfaces as AccessDenied/half-listed
+    * (observed: the first retention-enabled soak killed its UV consumer
+    * exactly this way). The atomic rename to a dot-prefixed name flips
+    * visibility in one filesystem op — no `v=` listing matches it, and a
+    * scan that captured the old path sees a clean whole-dir miss, which
+    * its `ignoreMissingFiles` skips — after which the physical delete
+    * proceeds with no reader able to walk in.
     *
     * Returns the number of segments expired. */
   def expireSegments(s: SparkSession, brokerDir: String,

@@ -37,25 +37,51 @@ object VersionedState {
 
   /** THE committed-ness rule, in one place: a `v=N` directory under
     * `path` is committed iff its `_SUCCESS` marker exists. Producers
-    * (`Kafka.txnProduce`), consumers (`Kafka.readCommitted`), retention
-    * (`Kafka.expireSegments`) and the state protocol below must all
-    * resolve visibility through this listing, so a future change to the
-    * commit protocol cannot fork the definition between them. */
+    * (`Kafka.txnProduce`), consumers (`Kafka.readCommitted`,
+    * `LedgerSource`), retention (`Kafka.expireSegments`) and the state
+    * protocol below must all resolve visibility through this rule, so a
+    * future change to the commit protocol cannot fork the definition
+    * between them. */
   def committedVersions(s: SparkSession, path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
     val f = fs(s, path)
-    if (!f.exists(root)) return Seq.empty
-    f.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("v="))
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .map(_.getName.stripPrefix("v=").toLong)
+    versions(f, path).filter(v => marked(f, path, v, "_SUCCESS"))
   }
 
   /** Highest complete (committed) version id under `path`, if any. */
   def latestVersion(s: SparkSession, path: String): Option[Long] =
-    committedVersions(s, path).maxOption
+    latestMarked(s, path, "_SUCCESS")
+
+  /** Highest committed version under `path` whose directory holds
+    * `child` (a ledger segment that carries a given topic). */
+  def latestVersionHolding(s: SparkSession, path: String,
+                           child: String): Option[Long] =
+    latestMarked(s, path, "_SUCCESS", child)
+
+  /** Highest `v=N` under `path` holding every one of `markers`, checking
+    * from the top down: one stat a marker when the newest version has
+    * them. */
+  private def latestMarked(s: SparkSession, path: String,
+                           markers: String*): Option[Long] = {
+    val f = fs(s, path)
+    versions(f, path).sorted(Ordering[Long].reverse)
+      .find(v => markers.forall(marked(f, path, v, _)))
+  }
+
+  private def marked(f: org.apache.hadoop.fs.FileSystem, path: String,
+                     v: Long, marker: String): Boolean =
+    f.exists(new org.apache.hadoop.fs.Path(s"$path/v=$v/$marker"))
+
+  /** Every `v=N` directory version under `path`, complete or not. */
+  private def versions(f: org.apache.hadoop.fs.FileSystem,
+                       path: String): Seq[Long] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (!f.exists(root)) Seq.empty
+    else f.listStatus(root).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .filter(_.startsWith("v="))
+      .map(_.stripPrefix("v=").toLong)
+  }
 
   /** The latest committed state frame, or `empty` if none. */
   def read(s: SparkSession, path: String, empty: => DataFrame): DataFrame =
@@ -73,13 +99,14 @@ object VersionedState {
                  merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
     val latest = latestVersion(s, path)
     if (latest.exists(_ >= batchId)) return false
+    // the parent is read with `empty`'s schema, so no footer-inference
+    // job runs; the read needs no pin, since the write below goes to a
+    // new `v=batchId` dir and the prune keeps the parent
     val prior = latest match {
-      case Some(v) => s.read.parquet(s"$path/v=$v")
+      case Some(v) => s.read.schema(empty.schema).parquet(s"$path/v=$v")
       case None    => empty
     }
-    // localCheckpoint pins the read before any write below the same root
-    merge(prior, batch).localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$path/v=$batchId")
+    merge(prior, batch).write.mode("overwrite").parquet(s"$path/v=$batchId")
     // prune everything older than the direct parent (crash between the
     // commit above and this prune only leaves extra history, never loss)
     val f = fs(s, path)
@@ -107,18 +134,8 @@ object VersionedState {
   private val CommitMarker = "_COMMIT"
 
   /** Highest version whose `_COMMIT` marker exists. */
-  def latestVersionMulti(s: SparkSession, path: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val f = fs(s, path)
-    if (!f.exists(root)) return None
-    val versions = f.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("v="))
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, CommitMarker)))
-      .map(_.getName.stripPrefix("v=").toLong)
-    if (versions.isEmpty) None else Some(versions.max)
-  }
+  def latestVersionMulti(s: SparkSession, path: String): Option[Long] =
+    latestMarked(s, path, CommitMarker)
 
   /** The latest committed multi-frame state, or `empty` if none. Frame
     * names must match the keys `applyBatchMulti` was given. */

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 
 /** Ledger segment retention ([[Kafka.expireSegments]]) — the Kafka
   * topic-retention analogue SOAK.md named as the knob for its one
-  * measured non-plateau (file-stream consumers list O(committed
-  * segments) per trigger; the reference's topics carry retention for
-  * exactly this reason). Gates:
+  * measured non-plateau (every ledger listing grows with the committed
+  * segments; the reference's topics carry retention for exactly this
+  * reason). Gates:
   *
   *  - a replayed batchId whose segment was EXPIRED is still a no-op
   *    (the `_retention_hwm` marker carries the skip past the deleted
@@ -44,8 +44,8 @@ class LedgerRetentionSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType.fromDDL(
         "n BIGINT, total BIGINT"))
 
-  /** File-stream consumer of topic `t` folding (count, sum of ids) into
-    * a [[VersionedState]] — content equality, not just row counts. */
+  /** Ledger consumer of topic `t` folding (count, sum of ids) into a
+    * [[VersionedState]] — content equality, not just row counts. */
   private def consume(broker: String, stateDir: String, ckpt: String) = {
     val s = spark
     LayeredPipeline.topicStream(s, broker, "t")
