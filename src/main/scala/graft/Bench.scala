@@ -57,37 +57,6 @@ object Bench {
       leaked.values.foreach(_.unpersist(false))
       leaked.size
     }
-    // Senescence instrumentation (VERDICT r12 #2): the suite validator
-    // catches rows inflated 2-5x vs same-process standalone, but the
-    // MECHANISM is unknown — it accumulates JVM-wide across the ~196-entry
-    // suite and survives full SparkSession recycles, so the suspects are
-    // JVM-lifetime state: code cache (JIT deopt / recompilation churn),
-    // metaspace / loaded classes (Janino codegen classes are never
-    // unloaded while referenced), old-gen residue, GC time, thread and fd
-    // counts. One line per recycle boundary; scripts/senescence.py
-    // correlates these against per-row inflation between a shared-JVM run
-    // and forked-per-segment runs.
-    def segStats(tag: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      import java.lang.management.{ManagementFactory => MF}
-      val pools = MF.getMemoryPoolMXBeans.asScala
-      def usedMb(sub: String): Double =
-        pools.filter(_.getName.contains(sub))
-          .map(_.getUsage.getUsed).sum / 1e6
-      val gcs = MF.getGarbageCollectorMXBeans.asScala
-      val fds = MF.getOperatingSystemMXBean match {
-        case u: com.sun.management.UnixOperatingSystemMXBean =>
-          u.getOpenFileDescriptorCount
-        case _ => -1L
-      }
-      println(f"SEGSTATS tag=$tag codecache_mb=${usedMb("CodeHeap")}%.1f " +
-        f"metaspace_mb=${usedMb("Metaspace")}%.1f " +
-        f"oldgen_mb=${usedMb("Old Gen")}%.1f " +
-        s"classes=${MF.getClassLoadingMXBean.getLoadedClassCount} " +
-        s"threads=${MF.getThreadMXBean.getThreadCount} " +
-        s"gc_count=${gcs.map(_.getCollectionCount).sum} " +
-        s"gc_time_ms=${gcs.map(_.getCollectionTime).sum} fds=$fds")
-    }
     // measured recycle cost (ADVICE r13: the validation budget's per-row
     // term must reflect THIS box's session-recycle overhead, not a flat
     // constant) — running mean over every recycle this run performs
@@ -96,7 +65,6 @@ object Bench {
     def recycleSession(): Unit = {
       val r0 = System.nanoTime()
       scrubState()
-      segStats("recycle")
       spark.stop()
       System.gc()
       spark = buildSession()
@@ -118,22 +86,10 @@ object Bench {
     // compilation and classloading are paid before measurement (standard
     // JIT-warmup practice; a long-lived cluster session has this state
     // permanently). Measurements below then reflect data-proportional work.
-    // Segment mode (VERDICT r12 #2, senescence bisection): "i:n" runs
-    // only queries [i*n, i*n+n) of the same sorted order, so a driver
-    // script (scripts/senescence.py) can run each segment in its own
-    // FORKED JVM — same ordering, same per-segment protocol as a
-    // shared-JVM suite whose recycleEvery equals n — and diff per-row
-    // inflation to separate Spark-cluster state from JVM senescence.
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val segQueries = sys.env.get("SPARK_GRAFT_SEGMENT") match {
-      case Some(seg) =>
-        val Array(i, n) = seg.split(":").map(_.toInt)
-        allQueries.slice(i * n, i * n + n)
-      case None => allQueries
-    }
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      segQueries.foreach { case (_, fn) =>
+      allQueries.foreach { case (_, fn) =>
         try { fn(spark, warmDir).write.format("noop").mode("overwrite").save() }
         catch { case _: Throwable => () }
       }
@@ -172,8 +128,7 @@ object Bench {
       else times.sorted.apply(runs / 2)
     }
     var sinceRecycle = 0
-    segStats("start")
-    val results = segQueries.map { case (name, fn) =>
+    val results = allQueries.map { case (name, fn) =>
       if (sinceRecycle >= recycleEvery) { recycleSession(); sinceRecycle = 0 }
       sinceRecycle += 1
       val t = timeQuery(() => fn(spark, sfDir))
@@ -196,10 +151,7 @@ object Bench {
     // 3.27 s in-suite vs ~1.05 s standalone (r10) purely from suite tail
     // state; the table writes below are still excluded from timing
     recycleSession()
-    // segment-mode runs skip the board-wide extras (bucketed/artifact
-    // variants) — they belong to the full suite, not any one segment
-    val isSegment = sys.env.contains("SPARK_GRAFT_SEGMENT")
-    val bucketedResults = if (isSegment) Seq.empty else try {
+    val bucketedResults = try {
       spark.sql("DROP TABLE IF EXISTS bench_b_lineitem")
       spark.sql("DROP TABLE IF EXISTS bench_b_orders")
       graft.sinks.Warehouse.writeBucketed(
@@ -234,7 +186,7 @@ object Bench {
     // pipelines. This row times the audit the way production runs it:
     // reading those artifacts. The artifact WRITE is the amortized ingest
     // cost, excluded from timing, same accounting as the bucketed rows.
-    val artifactResults = if (isSegment) Seq.empty else try {
+    val artifactResults = try {
       val base =
         java.nio.file.Files.createTempDirectory("graft-q192-art").toString
       graft.operators.Dedup.writeDupQualityArtifacts(
@@ -262,7 +214,6 @@ object Bench {
     // descending suite cost under a wall-clock budget so the rows that
     // drive adjudication are always validated first; anything the budget
     // drops is named in the artifact, never silently skipped.
-    segStats("pre-validation")
     val validateFloor =
       sys.env.getOrElse("SPARK_GRAFT_VALIDATE_FLOOR", "1.5").toDouble
     // Default budget derives from THIS run's measurements (ADVICE r12/r13:
@@ -316,25 +267,21 @@ object Bench {
     // queries are overhead-dominated (sub-second at every SF), so their
     // timing moves with the box, never with the board's data work.
     val driftRefNames = Seq("q09_gmv", "q36_running_total")
-    val driftRef: Seq[(String, Double)] =
-      if (isSegment) Seq.empty
-      else {
-        recycleSession()
-        driftRefNames.flatMap { name =>
-          SparkEntry.queries.get(name).flatMap { fn =>
-            try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              val t = (1 to 2).map { _ =>
-                if (scrubState() > 0) System.gc()
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                (System.nanoTime() - t0) / 1e9
-              }.min
-              Some(name -> t)
-            } catch { case _: Throwable => None }
-          }
-        }
+    recycleSession()
+    val driftRef: Seq[(String, Double)] = driftRefNames.flatMap { name =>
+      SparkEntry.queries.get(name).flatMap { fn =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val t = (1 to 2).map { _ =>
+            if (scrubState() > 0) System.gc()
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }.min
+          Some(name -> t)
+        } catch { case _: Throwable => None }
       }
+    }
     // stdout contract line stays SHORT (VERDICT r8 #8: the driver's tail
     // capture truncated the 162-entry map mid-line two rounds running):
     // the line carries the total plus a fixed headline subset; the FULL
@@ -370,9 +317,7 @@ object Bench {
         f"""  "$k": {"suite": $s0%.3f, "standalone": $sa%.3f, "replaced": $rep}"""
       }.mkString(",\n")
       val skipLines = skippedForBudget.map(n => s""""$n"""").mkString(", ")
-      // full registry (segment-mode slicing notwithstanding): the
-      // senescence driver derives its segment count from THIS list
-      // instead of re-guessing Bench's slicing heuristics (ADVICE r13)
+      // full registry: every declared query name, in suite run order
       val registryLines = allQueries.map(kv => s""""${kv._1}"""")
         .mkString(", ")
       val driftLines = driftRef

@@ -71,14 +71,16 @@ object Apps {
   }
 
   /** UniqueVisitApp (app/dwm/UniqueVisitApp.java): page log -> per-day UV
-    * dedup -> dwm_unique_visit. */
+    * dedup -> dwm_unique_visit. The session must use the RocksDB
+    * state-store provider, as the LayeredPipeline hops do. */
   def uniqueVisitApp(spark: SparkSession, c: Conf): StreamingQuery =
     Kafka.stringSink(
       StatefulOps.uniqueVisit(typedPageLog(spark, c, "unique_visit_app")).toDF(),
       c.brokers, "dwm_unique_visit", s"${c.checkpointRoot}/uv").start()
 
   /** UserJumpApp (app/dwm/UserJumpApp.java): page log -> CEP jump-out
-    * (10 s) -> dwm_user_jump_detail. */
+    * (10 s) -> dwm_user_jump_detail. The session must use the RocksDB
+    * state-store provider, as the LayeredPipeline hops do. */
   def userJumpApp(spark: SparkSession, c: Conf): StreamingQuery =
     Kafka.stringSink(
       StatefulOps.userJump(typedPageLog(spark, c, "user_jump_app"), gapMs = 10000L).toDF(),

@@ -121,7 +121,7 @@ object LayeredPipeline {
   def dwdVisitsToUv(s: SparkSession, dwdLedger: String, dwmLedger: String,
                     checkpoint: String,
                     wmSentinel: String = "__wm__"): StreamingQuery = {
-    val uv = graft.streaming.StatefulOpsV2
+    val uv = graft.streaming.StatefulOps
       .uniqueVisit(visitStream(s, dwdLedger))
       .toDF().filter(col("mid") =!= wmSentinel)
     Kafka.exactlyOnceDynamicTopicSink(
@@ -137,7 +137,7 @@ object LayeredPipeline {
   def dwdVisitsToJump(s: SparkSession, dwdLedger: String, dwmLedger: String,
                       checkpoint: String, gapMs: Long = 600000L,
                       wmSentinel: String = "__wm__"): StreamingQuery = {
-    val jumps = graft.streaming.StatefulOpsV2
+    val jumps = graft.streaming.StatefulOps
       .userJump(visitStream(s, dwdLedger), gapMs)
       .toDF().filter(col("mid") =!= wmSentinel)
     Kafka.exactlyOnceDynamicTopicSink(

@@ -39,8 +39,6 @@ object RangeJoin {
     * the same events scan, so the fixture guarantees overlap at any SF. */
   def windowEventStats(s: SparkSession, dir: String, nWindows: Int = 20,
                        spanSec: Long = 7200L, binSec: Long = 3600L): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
     val e = Tables.load(s, dir, "events")
       .select(col("user_id"), expr("ts div 1000000000").as("sec"))
     val w = e.filter(col("user_id") < nWindows)

@@ -23,14 +23,10 @@ import graft.functions.Exact._
   */
 object RefQueries {
 
-  /** events.ts is parquet TIMESTAMP(NANOS) which Spark reads as nanosecond
-    * Long via spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench and
-    * defensively here). */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+  /** events with `ts` as epoch-nanosecond Long ([[Tables.load]]'s
+    * contract, which also sets the legacy NANOS conf). */
+  private def events(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")
-  }
 
   private val tsSec: Column = expr("ts div 1000000000")
   private def day(secCol: Column): Column =

@@ -107,13 +107,10 @@ object Scd {
         col("valid_to").isNull.as("is_current"), col("run_id"))
   }
 
-  private def eventsUs(s: SparkSession, dir: String): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+  private def eventsUs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("us"),
         col("event_type"), col("value"))
-  }
 
   /** q71: full-stream SCD2 history (status = event_type). run_id is an
     * internal ordering key, not part of the declared output. */

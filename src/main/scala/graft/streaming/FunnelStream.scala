@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * previous step's anchor. Per-batch work reads the batch plus the state
   * rows of touched users — O(batch) per trigger, the ScdStream property.
   * The streaming CEP twin of the same family is T2 (jump detection,
-  * StatefulOpsV2); this is its multi-step, batch-equivalent form. */
+  * StatefulOps); this is its multi-step, batch-equivalent form. */
 object FunnelStream {
 
   /** Merge a micro-batch of (user_id, us, event_type) into funnel state

@@ -52,19 +52,4 @@ object IntervalJoins {
      .select(col("paymentId"), col("orderId"), col("skuId"), col("splitAmount"),
        col("amount"), col("callbackTime").as("p_time"), col("d_time"))
   }
-
-  /** J2 — payment ⋈ order, payment within `bandSec` AFTER the order
-    * (reference: 30 min, PaymentWideApp.java:123). */
-  def paymentWide(payments: Dataset[PaymentInfo], orders: Dataset[OrderInfo],
-                  bandSec: Long = 1800, watermarkDelay: String = "3 seconds"): DataFrame = {
-    val p = payments.toDF().withWatermark("callbackTime", watermarkDelay)
-    val o = orders.toDF().withWatermark("createTime", watermarkDelay)
-      .withColumnRenamed("orderId", "o_orderId")
-    p.join(o,
-      col("orderId") === col("o_orderId") &&
-      col("callbackTime") >= col("createTime") &&
-      col("callbackTime") <= col("createTime") + expr(s"INTERVAL $bandSec SECONDS"))
-     .select(col("paymentId"), col("orderId"), col("amount"),
-       col("callbackTime"), col("userId"), col("totalAmount"), col("createTime"))
-  }
 }

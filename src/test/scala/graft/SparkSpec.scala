@@ -25,4 +25,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def ts(ms: Long): java.sql.Timestamp = new java.sql.Timestamp(ms)
+
+  /** Runs `body` on the RocksDB state-store provider (transformWithState
+    * needs it), then restores the session default. */
+  def withRocksDb[T](body: => T): T = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
 }

@@ -145,9 +145,7 @@ class LayeredPipelineSpec extends SparkSpec {
     // uj_ct equals batch q07 (gap 600 s) aggregated per day.
     val s = spark; import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val stage =
         java.nio.file.Files.createTempDirectory("graft-layered-dwm").toString
       val dwdLedger = s"$stage/ledger_dwd"
@@ -260,7 +258,6 @@ class LayeredPipelineSpec extends SparkSpec {
         "FROM dws_visitor_stats").collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       assert(served === chain)
-    } finally
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

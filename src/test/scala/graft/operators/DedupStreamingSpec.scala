@@ -73,10 +73,10 @@ class DedupStreamingSpec extends SparkSpec {
 
     // and the within-stream exact dedup operator drops the cross-batch dup
     val input2 = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val deduped = graft.streaming.StatefulOps.streamingDedup(
-      input2.toDF().toDF("doc_id", "text", "ts")
-        .withColumn("content_hash", md5(col("text"))),
-      "content_hash", "ts", "10 seconds")
+    val deduped = input2.toDF().toDF("doc_id", "text", "ts")
+      .withColumn("content_hash", md5(col("text")))
+      .withWatermark("ts", "10 seconds")
+      .dropDuplicatesWithinWatermark("content_hash")
     val q2 = deduped.writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append").start()
     try {

@@ -105,8 +105,8 @@ class SkewSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     val in = MemoryStream[(Long, java.sql.Timestamp)]
     in.addData((1L, ts(10000)), (1L, ts(11000)), (2L, ts(12000)), (1L, ts(13000)))
-    val deduped = graft.streaming.StatefulOps.streamingDedup(
-      in.toDF().toDF("id", "ts"), "id", "ts", "10 seconds")
+    val deduped = in.toDF().toDF("id", "ts")
+      .withWatermark("ts", "10 seconds").dropDuplicatesWithinWatermark("id")
     val q = deduped.writeStream.format("memory").queryName("sd")
       .outputMode(OutputMode.Append).start()
     try {

@@ -10,14 +10,6 @@ import org.apache.spark.sql.streaming.OutputMode
 
 class AsOfStreamSpec extends SparkSpec {
 
-  private def withRocksDb[T](body: => T): T = {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private val base = 1700000000000L
 
   private def run(batches: Seq[Seq[AsOfIn]]): Array[AsOfOut] = withRocksDb {

@@ -47,9 +47,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("transformWithState RocksDB state survives a query restart") {
     val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val ckpt = java.nio.file.Files.createTempDirectory("ck-v2").toString
@@ -59,7 +57,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       val day3 = day2 + 86400000L
       val in = MemoryStream[graft.streaming.Model.LogEvent]
 
-      def start() = StatefulOpsV2.visitorRepair(
+      def start() = StatefulOps.visitorRepair(
           in.toDS().withWatermark("ts", "1 second"))
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.Model.RepairedEvent], _: Long) =>
@@ -91,6 +89,6 @@ class CheckpointRecoverySpec extends SparkSpec {
       assert(m1.head.isNew === "1" && !m1.head.repaired)
       assert(m1.last.isNew === "0" && m1.last.repaired,
         "day-2 visit not repaired: first-visit state was lost across restart")
-    } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

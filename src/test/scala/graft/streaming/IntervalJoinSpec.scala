@@ -38,11 +38,15 @@ class IntervalJoinSpec extends SparkSpec {
     import s.implicits._
     val payments = MemoryStream[PaymentInfo]
     val orders = MemoryStream[OrderInfo]
-    val joined = IntervalJoins.paymentWide(payments.toDS(), orders.toDS())
+    val details = MemoryStream[OrderDetail]
+    // J2 joins the order-wide stream (PaymentWideApp), itself the J1 join
+    val orderWide = IntervalJoins.orderWide(orders.toDS(), details.toDS())
+    val joined = IntervalJoins.paymentWideFull(payments.toDS(), orderWide)
     // base offset: an event at exactly epoch 0 sits at the initial watermark
     // and is filtered as late — use nonzero event times
     val t0 = 1000000L
     orders.addData(OrderInfo(1L, 100L, 50.0, ts(t0)))
+    details.addData(OrderDetail(11L, 1L, 7L, 50.0, ts(t0)))
     payments.addData(
       PaymentInfo(21L, 1L, 50.0, ts(t0 + 1200L * 1000)),      // within 30 min
       PaymentInfo(22L, 1L, 50.0, ts(t0 + 3600L * 1000 * 2)))  // too late

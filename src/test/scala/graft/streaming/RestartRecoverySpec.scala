@@ -25,14 +25,6 @@ import org.apache.spark.sql.functions._
   */
 class RestartRecoverySpec extends SparkSpec {
 
-  private def withRocksDb[T](body: => T): T = {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

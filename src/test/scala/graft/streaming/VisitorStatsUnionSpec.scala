@@ -2,14 +2,45 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.streaming.Model._
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The reference's full visitor-stats lineage composed in batch mode:
-  * raw JSON -> page split -> (pv/sv seeds) + UniqueVisit (uv) + UserJump
-  * (uj) -> 4-way union -> 10 s tumble, keyed by the reference's full
-  * (vc, ch, ar, is_new) dimension key (VisitorStatsApp.java:80-196).
+/** The reference's full visitor-stats lineage: raw JSON -> page split ->
+  * (pv/sv seeds) + UniqueVisit (uv) + UserJump (uj) -> 4-way union -> 10 s
+  * tumble, keyed by the reference's full (vc, ch, ar, is_new) dimension
+  * key (VisitorStatsApp.java:80-196). uv and uj come from the streaming
+  * keyed-state operators; the union and tumble run in batch over their
+  * collected output.
   */
 class VisitorStatsUnionSpec extends SparkSpec {
+
+  /** Runs UniqueVisit and UserJump over `typed` as two streaming queries
+    * and returns their collected output. A trailing sentinel, a
+    * mid-session event neither operator emits, advances the watermark past
+    * every fixture event so all pending jumps fire. */
+  private def uvAndJumps(typed: Dataset[LogEvent], gapMs: Long,
+                         tag: String): (DataFrame, DataFrame) = withRocksDb {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val events = typed.collect()
+    val input = MemoryStream[LogEvent]
+    input.addData(events.toIndexedSeq: _*)
+    val wm = input.toDS().withWatermark("ts", "1 second")
+    val queries = Seq(
+      StatefulOps.uniqueVisit(wm).writeStream.format("memory")
+        .queryName(s"${tag}_uv").start(),
+      StatefulOps.userJump(wm, gapMs).writeStream.format("memory")
+        .queryName(s"${tag}_uj").start())
+    try {
+      queries.foreach(_.processAllAvailable())
+      val end = events.map(_.ts.getTime).max + 86400000L
+      input.addData(LogEvent("__wm__", "home", "x", "0", ts(end)))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    (s.table(s"${tag}_uv"), s.table(s"${tag}_uj"))
+  }
 
   private def typedPages(pages: org.apache.spark.sql.DataFrame) = {
     val s = spark
@@ -36,8 +67,7 @@ class VisitorStatsUnionSpec extends SparkSpec {
       ev("102", "good_list", "detail", 300000L)).toDF("value")
     val pages = LogPipeline.pageLogs(LogPipeline.parseLogs(raw))
     val typed = typedPages(pages)
-    val uv = StatefulOps.uniqueVisit(typed).toDF()
-    val jumps = StatefulOps.userJump(typed, gapMs = 10000L, emitTrailing = true).toDF()
+    val (uv, jumps) = uvAndJumps(typed, gapMs = 10000L, "u2_canon")
     val stats = WindowedStats.visitorStatsUnion(pages, uv, jumps)
       .orderBy(col("stt"))
       .collect()
@@ -68,8 +98,7 @@ class VisitorStatsUnionSpec extends SparkSpec {
       .toDF("value")
     val pages = LogPipeline.pageLogs(LogPipeline.parseLogs(raw))
     val typed = typedPages(pages)
-    val uv = StatefulOps.uniqueVisit(typed).toDF()
-    val jumps = StatefulOps.userJump(typed, emitTrailing = true).toDF()
+    val (uv, jumps) = uvAndJumps(typed, gapMs = 10000L, "u2_split")
     val stats = WindowedStats.visitorStatsUnion(pages, uv, jumps).collect()
 
     assert(stats.length === 3) // (v1,web,110), (v1,ios,110), (v2,web,310)
