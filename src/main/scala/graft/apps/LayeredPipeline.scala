@@ -3,7 +3,7 @@ package graft.apps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.sources.Kafka
+import graft.sources.{Kafka, LocalFs}
 import graft.streaming.VersionedState
 
 /** The reference's DEPLOYMENT shape, not just its operators: N
@@ -38,15 +38,25 @@ import graft.streaming.VersionedState
   * whose segment already committed is skipped by the ledger before any
   * file lands. State merges are [[VersionedState]] transactions — the
   * replay-safe upsert every foreachBatch merge in this repo rides.
+  *
+  * Every hop builder and publisher first installs [[LocalFs]] on the
+  * session it is given, so the checkpoint, ledger, state and RocksDB
+  * files of a chain on local disk are written without a process fork per
+  * file.
   */
 object LayeredPipeline {
+
+  private def onLocalFs[T](s: SparkSession)(body: => T): T = {
+    LocalFs.install(s)
+    body
+  }
 
   /** ODS JSON carries its CDC table tag; DWD topic is a pure routing
     * projection of it (BaseDBApp's TableProcess routing, X2, collapsed to
     * the three tables this chain consumes). */
   def odsToDwd(ods: DataFrame, dwdLedger: String,
                checkpoint: String): StreamingQuery =
-    Kafka.exactlyOnceDynamicTopicSink(
+    onLocalFs(ods.sparkSession)(Kafka.exactlyOnceDynamicTopicSink(
       ods.select(
         when(get_json_object(col("value"), "$.tbl") === "order_info",
           lit("dwd_order_info"))
@@ -54,7 +64,7 @@ object LayeredPipeline {
           lit("dwd_visit_log"))
         .otherwise(lit("dwd_page_log")).as("topic"),
         col("value")),
-      dwdLedger, checkpoint).start()
+      dwdLedger, checkpoint).start())
 
   /** Streaming consumer over one topic of a ledger: the
     * [[graft.sources.LedgerSource]] offset-tracking consumer, one
@@ -69,7 +79,8 @@ object LayeredPipeline {
     * per-batch broadcast dim snapshot (J3's lookup-join shape), stamp the
     * event day, produce exactly-once to the DWM ledger. */
   def dwdOrdersToDwm(s: SparkSession, dwdLedger: String, dimDir: String,
-                     dwmLedger: String, checkpoint: String): StreamingQuery = {
+                     dwmLedger: String,
+                     checkpoint: String): StreamingQuery = onLocalFs(s) {
     val orders = topicStream(s, dwdLedger, "dwd_order_info")
       .select(from_json(col("value"), org.apache.spark.sql.types.StructType
         .fromDDL("o_orderkey BIGINT, o_custkey BIGINT, " +
@@ -120,7 +131,8 @@ object LayeredPipeline {
     * `dwm_unique_visit`. */
   def dwdVisitsToUv(s: SparkSession, dwdLedger: String, dwmLedger: String,
                     checkpoint: String,
-                    wmSentinel: String = "__wm__"): StreamingQuery = {
+                    wmSentinel: String = "__wm__"): StreamingQuery =
+      onLocalFs(s) {
     val uv = graft.streaming.StatefulOps
       .uniqueVisit(visitStream(s, dwdLedger))
       .toDF().filter(col("mid") =!= wmSentinel)
@@ -136,7 +148,8 @@ object LayeredPipeline {
     * `dwm_user_jump`. `gapMs` defaults to the batch q07 twin's 600 s. */
   def dwdVisitsToJump(s: SparkSession, dwdLedger: String, dwmLedger: String,
                       checkpoint: String, gapMs: Long = 600000L,
-                      wmSentinel: String = "__wm__"): StreamingQuery = {
+                      wmSentinel: String = "__wm__"): StreamingQuery =
+      onLocalFs(s) {
     val jumps = graft.streaming.StatefulOps
       .userJump(visitStream(s, dwdLedger), gapMs)
       .toDF().filter(col("mid") =!= wmSentinel)
@@ -162,7 +175,8 @@ object LayeredPipeline {
     * producer per partition in the reference. */
   def dwmVisitsToVisitorState(s: SparkSession, uvLedger: String,
                               jumpLedger: String, stateDir: String,
-                              checkpoint: String): StreamingQuery = {
+                              checkpoint: String): StreamingQuery =
+      onLocalFs(s) {
     def dayRows(ledger: String, topic: String, uv: Int, uj: Int) =
       topicStream(s, ledger, topic)
         .select(from_json(col("value"), org.apache.spark.sql.types.StructType
@@ -183,12 +197,13 @@ object LayeredPipeline {
   /** Materialize the visitor state as the dws_visitor_stats table
     * [[Serve]] registers (stt = day start, the publisher's grain). */
   def publishVisitorDws(s: SparkSession, visitorStateDir: String,
-                        warehouseDir: String): Unit =
+                        warehouseDir: String): Unit = onLocalFs(s) {
     graft.sinks.Warehouse.writeDws(
       VersionedState.read(s, visitorStateDir, emptyVisitor(s))
         .select(to_timestamp(col("day")).as("stt"), col("uv_ct"),
           col("uj_ct")),
       s"$warehouseDir/dws_visitor_stats")
+  }
 
   private def emptyGmv(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -200,7 +215,7 @@ object LayeredPipeline {
     * serves (toYYYYMMDD(stt)). Exact decimal sums; a replayed batchId is
     * a no-op by the state protocol. */
   def dwmToGmvState(s: SparkSession, dwmLedger: String, stateDir: String,
-                    checkpoint: String): StreamingQuery =
+                    checkpoint: String): StreamingQuery = onLocalFs(s) {
     topicStream(s, dwmLedger, "dwm_order_wide")
       .select(from_json(col("value"), org.apache.spark.sql.types.StructType
         .fromDDL("day STRING, o_totalprice DECIMAL(18,2)")).as("r"))
@@ -215,6 +230,7 @@ object LayeredPipeline {
               sum(col("order_ct")).as("order_ct")))
         (): Unit
       }.option("checkpointLocation", checkpoint).start()
+  }
 
   private def emptyKw(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -226,6 +242,7 @@ object LayeredPipeline {
   def dwdLogsToKeywordState(s: SparkSession, dwdLedger: String,
                             stateDir: String,
                             checkpoint: String): StreamingQuery =
+      onLocalFs(s) {
     topicStream(s, dwdLedger, "dwd_page_log")
       .select(from_json(col("value"), org.apache.spark.sql.types.StructType
         .fromDDL("doc_id BIGINT, text STRING")).as("r"))
@@ -238,6 +255,7 @@ object LayeredPipeline {
             .groupBy(col("keyword")).agg(sum(col("ct")).as("ct")))
         (): Unit
       }.option("checkpointLocation", checkpoint).start()
+  }
 
   /** Materialize the final committed states as the warehouse DWS tables
     * [[Serve]] registers — product stats at day grain (stt = day start,
@@ -245,7 +263,8 @@ object LayeredPipeline {
     * stamps keyword rows (the reference's window start). */
   def publishDws(s: SparkSession, gmvStateDir: String, kwStateDir: String,
                  warehouseDir: String,
-                 panelStt: String = "2021-02-27 10:00:00"): Unit = {
+                 panelStt: String = "2021-02-27 10:00:00"): Unit =
+      onLocalFs(s) {
     graft.sinks.Warehouse.writeDws(
       VersionedState.read(s, gmvStateDir, emptyGmv(s))
         .select(to_timestamp(col("day")).as("stt"), lit(0L).as("sku_id"),

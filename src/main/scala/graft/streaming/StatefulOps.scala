@@ -125,6 +125,13 @@ object StatefulOps {
       initOp()
     }
 
+    // Timers are keyed (key, expiry): one timer can serve a drain timestamp
+    // and the cleanup horizon at once. A key's timers are its buffered
+    // timestamps, its current horizon and superseded horizons at or below
+    // the watermark (these fire and are ignored). Registering a timer that
+    // exists, or deleting one that does not, costs a state-store call and
+    // a Spark WARN, so both calls below keep to that set.
+
     override def handleInputRows(mid: String, rows: Iterator[LogEvent],
                                  tv: TimerValues): Iterator[O] = {
       rows.foreach { e =>
@@ -132,7 +139,8 @@ object StatefulOps {
           val t = e.ts.getTime
           val cur = buf.getValue(t)
           buf.updateValue(t, if (cur == null) Array(e) else cur :+ e)
-          getHandle.registerTimer(t) // idempotent per (key, expiry)
+          if (cur == null && !(cleanupAt.exists() && cleanupAt.get() == t))
+            getHandle.registerTimer(t)
         }
       }
       Iterator.empty
@@ -157,18 +165,21 @@ object StatefulOps {
         Iterator.empty
       } else {
         buf.removeKey(t)
-        // slide the idle-eviction horizon past this drain. Timers are
-        // keyed (key, expiry), so a cleanup horizon can COINCIDE with a
-        // pending drain timestamp — deleting it blindly would delete the
-        // drain timer too and silently drop those events; only delete when
-        // no buffered events share the expiry (a superseded horizon that
-        // does coincide simply fires later and is ignored above).
+        // slide the idle-eviction horizon past this drain. The old horizon
+        // is deleted only while it is a timer of its own that cannot fire
+        // in this batch: one shared with a pending drain timestamp is that
+        // drain's timer (deleting it would silently drop those events),
+        // and one at or below the watermark is already in this batch's
+        // expired set, or fires in the next; it is ignored above then and
+        // Spark deletes it. The new horizon is registered only when no
+        // buffered timestamp already owns that timer.
         if (cleanupAt.exists()) {
           val old = cleanupAt.get()
-          if (old != t && !buf.containsKey(old)) getHandle.deleteTimer(old)
+          if (old != t && old > tv.getCurrentWatermarkInMs() &&
+              !buf.containsKey(old)) getHandle.deleteTimer(old)
         }
         val next = t + ttlMs
-        getHandle.registerTimer(next)
+        if (!buf.containsKey(next)) getHandle.registerTimer(next)
         cleanupAt.update(next)
         drain(mid, evs)
       }

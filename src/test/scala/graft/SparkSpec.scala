@@ -4,18 +4,24 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. */
+/** Shared local session for specs. It runs on the fork-free `file:`
+  * filesystem ([[graft.sources.LocalFs]]) that the streaming chain
+  * installs, so every spec writes its checkpoints and tables through it. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.streaming.checkpointLocation",
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      .getOrCreate()
+    graft.sources.LocalFs.install(s)
+    s
+  }
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -5,6 +5,11 @@ import graft.streaming.Model._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Logger => CoreLogger,
+  LogEvent => CoreLogEvent}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 
 /** The keyed-state operators over MemoryStream fixtures. Each test ends
   * with a far-future sentinel event that advances the watermark past every
@@ -21,6 +26,28 @@ class StatefulOpsSpec extends SparkSpec {
       .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(120000L), s"bounded run $name did not finish")
     finally q.stop()
+  }
+
+  /** Runs `body` and asserts that Spark's timer store logged no "Failed to
+    * delete/register timer" line meanwhile: the ordered-drain processors
+    * register or delete a timer only when it is known absent or present. */
+  private def withoutTimerWarnings(body: => Unit): Unit = {
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: CoreLogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.startsWith("Failed to")) failed.add(m)
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution." +
+      "streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    assert(failed.isEmpty)
   }
 
   test("T1 visitorRepair: is_new rewritten on later-day repeat (batch mode)") {
@@ -48,7 +75,7 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("F2 uniqueVisit: first entry per mid per day passes (batch mode)") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -67,7 +94,7 @@ class StatefulOpsSpec extends SparkSpec {
       val out = s.table("uv_bounded").as[LogEvent].collect().filter(_.mid != "zz")
       assert(out.length === 3)
       assert(out.count(_.mid == "m1") === 2)
-    }
+    })
   }
 
   test("T2 userJump: canonical fixture (batch mode)") {
@@ -151,7 +178,7 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("T1 visitorRepair: idle cleanup must not clear state while later events sit buffered") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -181,11 +208,11 @@ class StatefulOpsSpec extends SparkSpec {
         assert(m1.last.isNew === "0" && m1.last.repaired,
           "idle cleanup wiped first-visit state despite a buffered event")
       } finally q.stop()
-    }
+    })
   }
 
   test("F2 uniqueVisit: first entry per mid per day passes") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -210,11 +237,11 @@ class StatefulOpsSpec extends SparkSpec {
         assert(got.length === 3)
         assert(got.count(_.mid == "m1") === 2)
       } finally q.stop()
-    }
+    })
   }
 
   test("F2 uniqueVisit: ordered drain survives a large key group (hot-key shape)") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -243,11 +270,11 @@ class StatefulOpsSpec extends SparkSpec {
         assert(got.map(e => StatefulOps.dayOf(e.ts)).toSet.size === 2)
         assert(got.map(_.ts.getTime).toSet === Set(day1, day2 + 7L))
       } finally q.stop()
-    }
+    })
   }
 
   test("F2 uniqueVisit chains into a windowed aggregation (DWM -> DWS)") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -278,7 +305,7 @@ class StatefulOpsSpec extends SparkSpec {
         assert(rows.get(d1win).contains(2L)) // m1 + m2 on day1 (dup dropped)
         assert(rows.get(d2win).contains(1L)) // m1 on day2
       } finally q.stop()
-    }
+    })
   }
 
   test("T1 visitorRepair: state is evicted after 30 idle days") {
