@@ -81,14 +81,14 @@ object SparkEntry {
     // clustering) -> pack the CLEANED corpus — the end-to-end
     // trainingCorpusApp layout carries its own hash row instead of
     // inheriting trust from its parts (VERDICT r4 ask #4)
-    "q55_corpus_packed"   -> ((s, d) => graft.apps.Apps.trainingCorpusApp(s, d)._2),
+    "q55_corpus_packed"   -> ((s, d) => graft.operators.Corpus.trainingCorpusApp(s, d)._2),
     "q56_decontaminate"   -> ((s, d) => graft.operators.Curation.decontaminate(s, d)),
     "q57_stratified"      -> ((s, d) => graft.operators.Curation.stratifiedSample(s, d)),
     "q58_domain_mix"      -> ((s, d) => graft.operators.Curation.domainMix(s, d)),
     "q59_funnel"          -> ((s, d) => graft.operators.Curation.curationFunnel(s, d)),
     "q60_len_quantiles"   -> ((s, d) => graft.operators.Curation.lenQuantiles(s, d)),
     "q61_asof_click"      -> ((s, d) => graft.operators.AsOf.asOfClick(s, d)),
-    "q62_curated_packed"  -> ((s, d) => graft.apps.Apps.curatedCorpusApp(s, d)),
+    "q62_curated_packed"  -> ((s, d) => graft.operators.Corpus.curatedCorpusApp(s, d)),
     "q63_salted_join"     -> ((s, d) => graft.operators.Skew.saltedPartRevenue(s, d)),
     "q64_bm25_retrieval"  -> ((s, d) => TextQueries.bm25Retrieval(s, d)),
     "q65_ann_quantized"   -> ((s, d) => Similarity.quantizedTopK(s, d)),

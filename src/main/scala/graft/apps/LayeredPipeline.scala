@@ -1,8 +1,9 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.sources.{Kafka, LocalFs}
 import graft.streaming.VersionedState
 
@@ -17,17 +18,23 @@ import graft.streaming.VersionedState
   * contract the reference gets from transactional Kafka producers
   * (MyKafkaUtil.java:38-45).
   *
+  * This is the one runnable shape of the reference jobs; the README maps
+  * each of the 11 to its hop, or to its tested operator and batch twin.
   * Hop topology (LayeredPipelineSpec drives it end-to-end on sf0.001 data
   * with a mid-chain kill/restart and a replayed segment):
   *
   *   ODS (one raw CDC/log stream, `tbl`-tagged JSON)
   *     ─[odsToDwd: route by tbl]→ dwdLedger topic=dwd_order_info
+  *                               ↘ dwdLedger topic=dwd_visit_log
   *                               ↘ dwdLedger topic=dwd_page_log
   *   dwd_order_info ─[dwdOrdersToDwm: broadcast dim enrich]→
   *     dwmLedger topic=dwm_order_wide
+  *   dwd_visit_log  ─[dwdVisitsToUv / dwdVisitsToJump]→
+  *     uv / jump ledgers ─[dwmVisitsToVisitorState]→ visitor state
   *   dwm_order_wide ─[dwmToGmvState: versioned day-grain reduce]→ GMV state
   *   dwd_page_log   ─[dwdLogsToKeywordState: tokenize+count]→ keyword state
-  *   states ─[publishDws]→ warehouse DWS tables → [[Serve]]
+  *   states ─[publishDws / publishVisitorDws]→ warehouse DWS tables →
+  *     [[Serve]]
   *
   * Consumers read the ledger through [[graft.sources.LedgerSource]],
   * whose offset is the highest committed segment version holding its
@@ -50,6 +57,40 @@ object LayeredPipeline {
     LocalFs.install(s)
     body
   }
+
+  /** One ledger topic's records parsed with `ddl` into the struct
+    * column `struct`. */
+  private def parsedTopic(s: SparkSession, ledger: String, topic: String,
+                          ddl: String, struct: String = "r"): DataFrame =
+    topicStream(s, ledger, topic)
+      .select(from_json(col("value"), StructType.fromDDL(ddl)).as(struct))
+
+  /** `df`'s rows as `(topic, JSON value)` ledger records. */
+  private def records(df: DataFrame, topic: String): DataFrame =
+    Kafka.toJsonValue(df).select(lit(topic).as("topic"), col("value"))
+
+  /** Produces `df`'s rows exactly-once to `topic` of `ledger`. */
+  private def produce(df: DataFrame, topic: String, ledger: String,
+                      checkpoint: String): StreamingQuery =
+    Kafka.exactlyOnceDynamicTopicSink(records(df, topic), ledger, checkpoint)
+      .start()
+
+  private def emptyState(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
+
+  /** Folds each micro-batch of `in` into the [[VersionedState]] at
+    * `stateDir` (schema `ddl`) with `merge`, one transaction per batch. */
+  private def foldInto(s: SparkSession, in: DataFrame, stateDir: String,
+                       ddl: String, checkpoint: String)(
+      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    in.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      VersionedState.applyBatch(s, stateDir, id, b, emptyState(s, ddl), merge)
+      (): Unit
+    }.option("checkpointLocation", checkpoint).start()
+
+  private val GmvDdl = "day STRING, gmv DECIMAL(38,2), order_ct BIGINT"
+  private val KwDdl = "keyword STRING, ct BIGINT"
+  private val VisitorDdl = "day STRING, uv_ct BIGINT, uj_ct BIGINT"
 
   /** ODS JSON carries its CDC table tag; DWD topic is a pure routing
     * projection of it (BaseDBApp's TableProcess routing, X2, collapsed to
@@ -81,10 +122,9 @@ object LayeredPipeline {
   def dwdOrdersToDwm(s: SparkSession, dwdLedger: String, dimDir: String,
                      dwmLedger: String,
                      checkpoint: String): StreamingQuery = onLocalFs(s) {
-    val orders = topicStream(s, dwdLedger, "dwd_order_info")
-      .select(from_json(col("value"), org.apache.spark.sql.types.StructType
-        .fromDDL("o_orderkey BIGINT, o_custkey BIGINT, " +
-          "o_orderdate TIMESTAMP, o_totalprice DECIMAL(18,2)")).as("o"))
+    val orders = parsedTopic(s, dwdLedger, "dwd_order_info",
+      "o_orderkey BIGINT, o_custkey BIGINT, " +
+        "o_orderdate TIMESTAMP, o_totalprice DECIMAL(18,2)", "o")
       .select(col("o.*"))
     orders.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
       // dim snapshot read per micro-batch (S5's config-poll discipline);
@@ -94,10 +134,7 @@ object LayeredPipeline {
       val wide = b.join(broadcast(dim), Seq("o_custkey"), "left")
         .select(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),
           col("o_orderkey"), col("o_totalprice"), col("c_mktsegment"))
-      Kafka.txnProduce(
-        Kafka.toJsonValue(wide).select(lit("dwm_order_wide").as("topic"),
-          col("value")),
-        dwmLedger, id)
+      Kafka.txnProduce(records(wide, "dwm_order_wide"), dwmLedger, id)
       (): Unit
     }.option("checkpointLocation", checkpoint).start()
   }
@@ -116,9 +153,7 @@ object LayeredPipeline {
     * Each producer filters the sentinel from its OUTPUT instead. */
   private def visitStream(s: SparkSession, dwdLedger: String) = {
     import s.implicits._
-    topicStream(s, dwdLedger, "dwd_visit_log")
-      .select(from_json(col("value"), org.apache.spark.sql.types.StructType
-        .fromDDL(visitDdl)).as("r"))
+    parsedTopic(s, dwdLedger, "dwd_visit_log", visitDdl)
       .select(col("r.*"))
       .withWatermark("ts", "0 seconds")
       .as[graft.streaming.Model.LogEvent]
@@ -136,10 +171,7 @@ object LayeredPipeline {
     val uv = graft.streaming.StatefulOps
       .uniqueVisit(visitStream(s, dwdLedger))
       .toDF().filter(col("mid") =!= wmSentinel)
-    Kafka.exactlyOnceDynamicTopicSink(
-      Kafka.toJsonValue(uv)
-        .select(lit("dwm_unique_visit").as("topic"), col("value")),
-      dwmLedger, checkpoint).start()
+    produce(uv, "dwm_unique_visit", dwmLedger, checkpoint)
   }
 
   /** DWD→DWM: UserJumpApp (`UserJumpApp.java:88-158`) as a ledger
@@ -153,16 +185,8 @@ object LayeredPipeline {
     val jumps = graft.streaming.StatefulOps
       .userJump(visitStream(s, dwdLedger), gapMs)
       .toDF().filter(col("mid") =!= wmSentinel)
-    Kafka.exactlyOnceDynamicTopicSink(
-      Kafka.toJsonValue(jumps)
-        .select(lit("dwm_user_jump").as("topic"), col("value")),
-      dwmLedger, checkpoint).start()
+    produce(jumps, "dwm_user_jump", dwmLedger, checkpoint)
   }
-
-  private def emptyVisitor(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "day STRING, uv_ct BIGINT, uj_ct BIGINT"))
 
   /** DWM→DWS: the VisitorStats-shaped reduce — the U2 union of the two
     * DWM visit topics folded into one day-grain (uv_ct, uj_ct) state
@@ -178,20 +202,16 @@ object LayeredPipeline {
                               checkpoint: String): StreamingQuery =
       onLocalFs(s) {
     def dayRows(ledger: String, topic: String, uv: Int, uj: Int) =
-      topicStream(s, ledger, topic)
-        .select(from_json(col("value"), org.apache.spark.sql.types.StructType
-          .fromDDL("mid STRING, ts TIMESTAMP")).as("r"))
+      parsedTopic(s, ledger, topic, "mid STRING, ts TIMESTAMP")
         .select(date_format(col("r.ts"), "yyyy-MM-dd").as("day"),
           lit(uv.toLong).as("uv_ct"), lit(uj.toLong).as("uj_ct"))
-    dayRows(uvLedger, "dwm_unique_visit", 1, 0)
-      .unionByName(dayRows(jumpLedger, "dwm_user_jump", 0, 1))
-      .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-        VersionedState.applyBatch(s, stateDir, id, b, emptyVisitor(s),
-          (st, bt) => st.unionByName(bt)
-            .groupBy(col("day")).agg(sum(col("uv_ct")).as("uv_ct"),
-              sum(col("uj_ct")).as("uj_ct")))
-        (): Unit
-      }.option("checkpointLocation", checkpoint).start()
+    foldInto(s, dayRows(uvLedger, "dwm_unique_visit", 1, 0)
+        .unionByName(dayRows(jumpLedger, "dwm_user_jump", 0, 1)),
+        stateDir, VisitorDdl, checkpoint) { (st, bt) =>
+      st.unionByName(bt)
+        .groupBy(col("day")).agg(sum(col("uv_ct")).as("uv_ct"),
+          sum(col("uj_ct")).as("uj_ct"))
+    }
   }
 
   /** Materialize the visitor state as the dws_visitor_stats table
@@ -199,16 +219,11 @@ object LayeredPipeline {
   def publishVisitorDws(s: SparkSession, visitorStateDir: String,
                         warehouseDir: String): Unit = onLocalFs(s) {
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, visitorStateDir, emptyVisitor(s))
+      VersionedState.read(s, visitorStateDir, emptyState(s, VisitorDdl))
         .select(to_timestamp(col("day")).as("stt"), col("uv_ct"),
           col("uj_ct")),
       s"$warehouseDir/dws_visitor_stats")
   }
-
-  private def emptyGmv(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "day STRING, gmv DECIMAL(38,2), order_ct BIGINT"))
 
   /** DWM→DWS: day-grain GMV reduce as a [[VersionedState]] transaction —
     * the ProductStats windowed-aggregate hop at the grain the publisher
@@ -216,26 +231,17 @@ object LayeredPipeline {
     * a no-op by the state protocol. */
   def dwmToGmvState(s: SparkSession, dwmLedger: String, stateDir: String,
                     checkpoint: String): StreamingQuery = onLocalFs(s) {
-    topicStream(s, dwmLedger, "dwm_order_wide")
-      .select(from_json(col("value"), org.apache.spark.sql.types.StructType
-        .fromDDL("day STRING, o_totalprice DECIMAL(18,2)")).as("r"))
-      .select(col("r.*"))
-      .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-        VersionedState.applyBatch(s, stateDir, id, b, emptyGmv(s),
-          (st, bt) => st.unionByName(bt.select(col("day"),
-              col("o_totalprice").cast("decimal(38,2)").as("gmv"),
-              lit(1L).as("order_ct")))
-            .groupBy(col("day")).agg(
-              sum(col("gmv")).cast("decimal(38,2)").as("gmv"),
-              sum(col("order_ct")).as("order_ct")))
-        (): Unit
-      }.option("checkpointLocation", checkpoint).start()
+    foldInto(s, parsedTopic(s, dwmLedger, "dwm_order_wide",
+        "day STRING, o_totalprice DECIMAL(18,2)").select(col("r.*")),
+        stateDir, GmvDdl, checkpoint) { (st, bt) =>
+      st.unionByName(bt.select(col("day"),
+          col("o_totalprice").cast("decimal(38,2)").as("gmv"),
+          lit(1L).as("order_ct")))
+        .groupBy(col("day")).agg(
+          sum(col("gmv")).cast("decimal(38,2)").as("gmv"),
+          sum(col("order_ct")).as("order_ct"))
+    }
   }
-
-  private def emptyKw(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "keyword STRING, ct BIGINT"))
 
   /** DWD→DWS: the KeywordStatsApp hop — tokenize the page-log payload
     * (D1's UDTF as explode) and maintain exact counts per keyword. */
@@ -243,18 +249,14 @@ object LayeredPipeline {
                             stateDir: String,
                             checkpoint: String): StreamingQuery =
       onLocalFs(s) {
-    topicStream(s, dwdLedger, "dwd_page_log")
-      .select(from_json(col("value"), org.apache.spark.sql.types.StructType
-        .fromDDL("doc_id BIGINT, text STRING")).as("r"))
-      .select(explode(graft.functions.Text.tokens(col("r.text")))
-        .as("keyword"))
-      .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-        VersionedState.applyBatch(s, stateDir, id, b, emptyKw(s),
-          (st, bt) => st.unionByName(bt.select(col("keyword"),
-              lit(1L).as("ct")))
-            .groupBy(col("keyword")).agg(sum(col("ct")).as("ct")))
-        (): Unit
-      }.option("checkpointLocation", checkpoint).start()
+    foldInto(s, parsedTopic(s, dwdLedger, "dwd_page_log",
+        "doc_id BIGINT, text STRING")
+        .select(explode(graft.functions.Text.tokens(col("r.text")))
+          .as("keyword")),
+        stateDir, KwDdl, checkpoint) { (st, bt) =>
+      st.unionByName(bt.select(col("keyword"), lit(1L).as("ct")))
+        .groupBy(col("keyword")).agg(sum(col("ct")).as("ct"))
+    }
   }
 
   /** Materialize the final committed states as the warehouse DWS tables
@@ -266,12 +268,12 @@ object LayeredPipeline {
                  panelStt: String = "2021-02-27 10:00:00"): Unit =
       onLocalFs(s) {
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, gmvStateDir, emptyGmv(s))
+      VersionedState.read(s, gmvStateDir, emptyState(s, GmvDdl))
         .select(to_timestamp(col("day")).as("stt"), lit(0L).as("sku_id"),
           col("gmv").as("order_amount"), col("order_ct")),
       s"$warehouseDir/dws_product_stats")
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, kwStateDir, emptyKw(s))
+      VersionedState.read(s, kwStateDir, emptyState(s, KwDdl))
         .select(to_timestamp(lit(panelStt)).as("stt"), col("keyword"),
           col("ct"), lit("SEARCH").as("source")),
       s"$warehouseDir/dws_keyword_stats")

@@ -43,7 +43,7 @@ object Corpus {
   /** Core of [[packAssign]] over any (doc_id, text) frame — the layout is
     * a function of the frame it is given, so packing a CLEANED corpus
     * (post-dedup) lays out only the surviving docs (see
-    * [[graft.apps.Apps.trainingCorpusApp]]). */
+    * [[trainingCorpusApp]]). */
   def packAssignDf(docs: DataFrame, budget: Int = 2048): DataFrame =
     packAssignCounts(docs.select(col("doc_id"),
       size(Text.tokens(col("text"))).cast("long").as("n_tokens")), budget)
@@ -100,6 +100,47 @@ object Corpus {
           " ")).as("chunk_hash"))
       .orderBy(col("doc_id"), col("chunk_id"))
   }
+
+  /** q55 — the training-data pipeline composed end to end: near-dup
+    * cluster the corpus on the LSH candidate edges (ONE clustering, shared
+    * by the keep set), keep one doc per cluster, then pack the surviving
+    * docs into token-budget bins and cut overlapping chunk spans. Returns
+    * (kept, packed, chunks) frames; every stage is the same operator a
+    * declared query verifies (q48/q49/q53/q54), so this composition is
+    * oracle-grade by construction. The keep-set join is a left-semi
+    * against a metadata-sized id list — the corpus itself never shuffles
+    * on its way into packing/chunking. */
+  def trainingCorpusApp(spark: SparkSession, dir: String,
+                        budget: Int = 2048, chunkSize: Int = 32,
+                        chunkOverlap: Int = 8): (DataFrame, DataFrame, DataFrame) = {
+    // shares q48's cached clustering; ordered = false — `kept` only ever
+    // feeds the left-semi join below, so a presentation sort is dead work
+    val kept = Dedup.dedupKeepSet(spark, dir, ordered = false)
+    // pack/chunk the CLEANED corpus: the layout must be computed over the
+    // surviving docs, or dropped dups leave token-sized holes in the bins
+    // (filtering the pack output instead of its input would do exactly
+    // that)
+    val cleaned = Tables.load(spark, dir, "documents")
+      .join(kept, Seq("doc_id"), "left_semi")
+    (kept, packAssignDf(cleaned, budget),
+      chunkSpansDf(cleaned, chunkSize, chunkOverlap))
+  }
+
+  /** q62 — the FULL curation composition: quality filter → near-dup
+    * removal → train-split decontamination → sequence packing. Same
+    * layout-over-survivors rule as [[trainingCorpusApp]] — the packing is
+    * computed on the curated doc set, never filtered after the fact — but
+    * the survivor set is the funnel's stage 4 (q59), not just dedup. */
+  def curatedCorpusApp(spark: SparkSession, dir: String,
+                       budget: Int = 2048): DataFrame =
+    // token counts come from the shared feature artifact — the whole
+    // curation composition tokenizes the corpus exactly ONCE (inside
+    // docFeatures' checkpointed build), not once per stage. The flag
+    // frame CARRIES n_tokens through from that artifact, so no per-doc
+    // join re-derives a column the survivors already hold.
+    packAssignCounts(Curation.curationFlags(spark, dir)
+      .filter(col("pq") && col("kept") && col("clean"))
+      .select(col("doc_id"), col("n_tokens")), budget)
 
   // size() collides with the local `size` param name inside chunkSpans
   private def size_(c: org.apache.spark.sql.Column) =

@@ -5,65 +5,30 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
-/** S1/S2/K1/K2 — Kafka source/sink builders (reference MyKafkaUtil.java:
-  * 20-63). The test environment has neither a broker nor the
-  * spark-sql-kafka-0-10 connector jar (zero-egress), so these builders are
-  * compile-checked only and `stringSource` will throw until the connector
-  * is on the cluster classpath (it ships with any real deployment). Every
-  * transformation they wrap is tested against MemoryStream/batch frames,
-  * which share the same DataFrame surface — swapping the source is a
-  * one-line change by design (SURVEY.md §7.1).
+/** The exactly-once topic ledger: the on-disk stand-in for the
+  * reference's transactional Kafka topics (MyKafkaUtil.java:38-45) that
+  * every `graft.apps.LayeredPipeline` hop produces to and consumes from.
   *
-  * Semantics note (SURVEY.md §4): the reference's producer is EXACTLY_ONCE
-  * transactional (MyKafkaUtil.java:44); Spark's Kafka sink is at-least-once.
-  * End-to-end exactly-once is recovered downstream via the idempotent
-  * keyed upserts in graft.streaming.DynamicRouting (K3 pattern) or
-  * checkpoint+dedup on a unique event id.
+  *  - [[txnProduce]] writes one micro-batch as one committed segment
+  *    (`v=<batchId>`, partitioned by `topic`) and skips a replayed
+  *    batchId, so a hop's produce is exactly-once;
+  *  - [[graft.sources.LedgerSource]] (streaming) and [[readCommitted]]
+  *    (batch) read only `_SUCCESS`-committed segments — the
+  *    `read_committed` consumer;
+  *  - [[expireSegments]] is topic retention.
+  *
+  * A replayable source plus an idempotent sink is the Structured
+  * Streaming recipe for end-to-end exactly-once; the transformations
+  * between them are plain DataFrame functions, tested over MemoryStream
+  * and batch frames.
   */
 object Kafka {
-
-  /** S1 — subscribe to a topic as a streaming string DataFrame
-    * (MyKafkaUtil.getKafkaSource, MyKafkaUtil.java:23-29). `minPartitions`
-    * decouples Spark parallelism from Kafka partition count at scale. */
-  def stringSource(spark: SparkSession, brokers: String, topic: String,
-                   groupId: String, minPartitions: Int = 32): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", topic)
-      .option("kafka.group.id", groupId)
-      .option("startingOffsets", "latest")
-      .option("minPartitions", minPartitions)
-      .load()
-      .selectExpr("CAST(value AS STRING) AS value")
 
   /** Serialize all columns into the single JSON `value` column every
     * downstream from_json consumer parses — the one definition all
     * producer sites share so shapes cannot silently diverge. */
   def toJsonValue(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))
-
-  /** K1 — fixed-topic JSON string sink (MyKafkaUtil.getKafkaSink,
-    * MyKafkaUtil.java:31-36): serialize all columns to one JSON value. */
-  def stringSink(df: DataFrame, brokers: String, topic: String,
-                 checkpoint: String): DataStreamWriter[Row] =
-    toJsonValue(df)
-      .writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-
-  /** K2 — per-record dynamic topic sink (MyKafkaUtil.getKafkaSinkBySchema,
-    * MyKafkaUtil.java:38-45): the built-in sink honors a `topic` column,
-    * so dynamic routing is a projection, not a custom serializer. Expects
-    * (topic, value) columns, e.g. from DynamicRouting.factRecords. */
-  def dynamicTopicSink(routed: DataFrame, brokers: String,
-                       checkpoint: String): DataStreamWriter[Row] =
-    routed.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("checkpointLocation", checkpoint)
 
   /** K2-EO — the EXACTLY_ONCE half of the reference's producer contract
     * (MyKafkaUtil.java:38-45 configures a transactional producer with a

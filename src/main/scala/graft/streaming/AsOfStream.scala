@@ -64,8 +64,9 @@ object AsOfStream {
           rights.updateValue(t, nv)
         } else {
           val cur = lefts.getValue(t)
+          // a buffered t already has its drain timer
+          if (cur == null) getHandle.registerTimer(t)
           lefts.updateValue(t, if (cur == null) Array(r.id) else cur :+ r.id)
-          getHandle.registerTimer(t) // idempotent per (key, expiry)
         }
       }
       Iterator.empty

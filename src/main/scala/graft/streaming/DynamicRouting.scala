@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Spark-first translation: the config is a small DataFrame broadcast into
   * a join (refreshing it per micro-batch replaces the reference's 5 s
   * config poll, S5); pruning is `map_filter` against the per-row whitelist
-  * (P4); the "per-record Kafka topic" sink (K2) is the built-in `topic`
-  * column; the Phoenix upsert (K3) becomes an idempotent last-write-wins
+  * (P4); the "per-record Kafka topic" sink (K2) is a `topic` column that
+  * the ledger's exactly-once sink partitions segments by; the Phoenix upsert (K3) becomes an idempotent last-write-wins
   * parquet snapshot per dim table.
   */
 object DynamicRouting {
@@ -36,8 +36,7 @@ object DynamicRouting {
   }
 
   /** K2-shaped fact output: per-row topic + JSON value, directly writable
-    * by the Kafka sink (`writeStream.format("kafka")` honors a `topic`
-    * column). */
+    * by [[graft.sources.Kafka.exactlyOnceDynamicTopicSink]]. */
   def factRecords(routedDf: DataFrame): DataFrame =
     routedDf.filter(col("sinkType") === "kafka")
       .select(col("sinkTable").as("topic"), to_json(col("data")).as("value"))

@@ -9,13 +9,11 @@ import org.apache.spark.sql.types._
   * (X1), display-array explode with page_id attached (X3), schema-on-read
   * JSON edge (P1).
   *
-  * Works identically on a batch DataFrame of JSON strings and on a
-  * streaming Kafka value column — the transformations are pure
-  * DataFrame => DataFrame (SURVEY.md §7.1's two-mode architecture).
-  *
-  * Scale: from_json + filters are one codegen'd scan pass; the three-sink
-  * fan-out in streaming mode is a foreachBatch with persist() so the
-  * parse happens once per micro-batch, not three times.
+  * Works identically on a batch DataFrame of JSON strings and on the
+  * `value` column of a ledger topic stream
+  * (`graft.apps.LayeredPipeline.topicStream`) — the transformations are
+  * pure DataFrame => DataFrame, and from_json + the filters are one
+  * codegen'd scan pass.
   */
 object LogPipeline {
 
@@ -54,12 +52,6 @@ object LogPipeline {
     StructField("ts", LongType),
     StructField("data", MapType(StringType, StringType))))
 
-  /** P1: parse a JSON-string column into the log struct, keeping the raw
-    * string alongside — the single-parse form that both the clean and the
-    * dirty branch derive from. */
-  def parseLogsKeepRaw(raw: DataFrame, jsonCol: String = "value"): DataFrame =
-    raw.withColumn("_log", from_json(col(jsonCol), logSchema))
-
   private def dirtyCond: org.apache.spark.sql.Column =
     col("_log").isNull ||
       // no ts = no event time: such a record cannot enter watermarked
@@ -68,17 +60,6 @@ object LogPipeline {
       col("_log.ts").isNull ||
       (col("_log.common").isNull && col("_log.start").isNull &&
        col("_log.page").isNull)
-
-  /** Clean branch of a raw-preserving parse: the parsed-log shape the
-    * split functions consume. */
-  def cleanFromRaw(withRaw: DataFrame): DataFrame =
-    withRaw.filter(!dirtyCond)
-      .select(col("_log.*"))
-      .withColumn("event_ts", timestamp_millis(col("ts")))
-
-  /** Dirty branch of a raw-preserving parse: the raw strings to quarantine. */
-  def dirtyFromRaw(withRaw: DataFrame, jsonCol: String = "value"): DataFrame =
-    withRaw.filter(dirtyCond).select(col(jsonCol))
 
   /** P1: parse a JSON-string column into the log struct. */
   def parseLogs(raw: DataFrame, jsonCol: String = "value"): DataFrame =
@@ -91,7 +72,8 @@ object LogPipeline {
     * recognizable log structure. Routed to a quarantine sink, never
     * dropped silently. */
   def dirtyLogs(raw: DataFrame, jsonCol: String = "value"): DataFrame =
-    dirtyFromRaw(parseLogsKeepRaw(raw, jsonCol), jsonCol)
+    raw.withColumn("_log", from_json(col(jsonCol), logSchema))
+      .filter(dirtyCond).select(col(jsonCol))
 
   /** X1 — start-log branch (BaseLogAPP.java:152-160). */
   def startLogs(parsed: DataFrame): DataFrame =
@@ -111,18 +93,6 @@ object LogPipeline {
       .select(col("common"), col("page.page_id").as("page_id"), col("ts"),
         explode(col("displays")).as("display"))
       .select(col("common"), col("page_id"), col("ts"), col("display.*"))
-
-  /** Streaming fan-out: one parse, three sinks (the Spark idiom replacing
-    * Flink side outputs — SURVEY.md §4). Writes parquet per branch. */
-  def fanOutBatch(parsed: DataFrame, outDir: String): Unit = {
-    parsed.persist()
-    try {
-      startLogs(parsed).write.mode("append").parquet(s"$outDir/dwd_start_log")
-      val pages = pageLogs(parsed)
-      pages.write.mode("append").parquet(s"$outDir/dwd_page_log")
-      displayLogs(parsed).write.mode("append").parquet(s"$outDir/dwd_display_log")
-    } finally parsed.unpersist()
-  }
 
   /** F1 — CDC ETL filter (BaseDBApp.java:66-72). */
   def cdcClean(parsed: DataFrame): DataFrame =

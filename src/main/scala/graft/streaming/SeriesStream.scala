@@ -148,8 +148,12 @@ object SeriesStream {
       val cur = if (open.exists()) open.get() else Array.empty[Island]
       val merged = sweep(cur ++ rows.map(r => Island(r.st, r.en, 1L)))
       open.update(merged)
-      // one timer per island end: fires when the watermark passes it
-      merged.foreach(i => getHandle.registerTimer(i.en / 1000 + 1))
+      // one timer per island end: fires when the watermark passes it.
+      // Every open island's timer is already pending, so only ends the
+      // merge created need one.
+      val pending = cur.map(_.en / 1000 + 1).toSet
+      merged.map(_.en / 1000 + 1).distinct.filterNot(pending)
+        .foreach(getHandle.registerTimer)
       // islands already sealed by the current watermark emit immediately
       sealReady(userId, tv.getCurrentWatermarkInMs() * 1000)
     }

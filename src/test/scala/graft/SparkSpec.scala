@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Logger => CoreLogger,
+  LogEvent => CoreLogEvent}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,5 +44,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body
     finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  /** Runs `body` and asserts that Spark's timer store logged no "Failed to
+    * delete/register timer" line meanwhile: the transformWithState
+    * processors register or delete a timer only when it is known absent
+    * or present. */
+  def withoutTimerWarnings[T](body: => T): T = {
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: CoreLogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.startsWith("Failed to")) failed.add(m)
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution." +
+      "streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    val out = try body
+      finally { logger.removeAppender(appender); appender.stop() }
+    assert(failed.isEmpty)
+    out
   }
 }

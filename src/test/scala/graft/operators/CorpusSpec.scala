@@ -58,7 +58,7 @@ class CorpusSpec extends SparkSpec {
   test("training-corpus app: dedup -> keep -> pack/chunk composes with one clustering") {
     Dedup.clearClusterCache()
     val before = Dedup.clusteringRuns.get()
-    val (kept, packed, chunks) = graft.apps.Apps.trainingCorpusApp(spark, sf)
+    val (kept, packed, chunks) = Corpus.trainingCorpusApp(spark, sf)
     val keptIds = kept.collect().map(_.getLong(0)).toSet
     val packedRows = packed.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

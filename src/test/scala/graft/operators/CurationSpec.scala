@@ -125,7 +125,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q62: packed curated corpus covers exactly the funnel's stage-4 docs, hole-free") {
-    val packed = graft.apps.Apps.curatedCorpusApp(spark, sf).collect()
+    val packed = Corpus.curatedCorpusApp(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val stage4 = Curation.curationFunnel(spark, sf).collect()
       .find(_.getInt(0) == 4).get
@@ -164,7 +164,7 @@ class CurationSpec extends SparkSpec {
     // over DISJOINT bucket slices (10% + 90%): one corpus tokenization of
     // total work. Before the artifact, q62 also re-tokenized for the
     // quality flags and the packing counts.
-    assert(nTokenize(graft.apps.Apps.curatedCorpusApp(spark, sf)) === 2)
+    assert(nTokenize(Corpus.curatedCorpusApp(spark, sf)) === 2)
     assert(nTokenize(Curation.curationFunnel(spark, sf)) === 2)
     assert(nTokenize(Curation.decontaminate(spark, sf)) === 2)
     // the sampling/mixture consumers never touch text at all

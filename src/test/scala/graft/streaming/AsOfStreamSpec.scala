@@ -12,7 +12,8 @@ class AsOfStreamSpec extends SparkSpec {
 
   private val base = 1700000000000L
 
-  private def run(batches: Seq[Seq[AsOfIn]]): Array[AsOfOut] = withRocksDb {
+  private def run(batches: Seq[Seq[AsOfIn]]): Array[AsOfOut] =
+      withoutTimerWarnings(withRocksDb {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
@@ -30,10 +31,10 @@ class AsOfStreamSpec extends SparkSpec {
       q.processAllAvailable()
       s.table(name).as[AsOfOut].collect().filter(_.k != -1L)
     } finally q.stop()
-  }
+  })
 
   test("as-of version state survives a checkpointed query restart") {
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -64,7 +65,7 @@ class AsOfStreamSpec extends SparkSpec {
       assert(rows.length === 1)
       assert(rows.head.asofV === Some(42.0),
         "version state lost across restart: lookup found no as-of match")
-    }
+    })
   }
 
   test("streaming as-of matches versions at-or-before, across micro-batches") {
@@ -74,9 +75,11 @@ class AsOfStreamSpec extends SparkSpec {
       Seq(AsOfIn(1, new Timestamp(base + 300), 1, 0, 2.0),   // version @300
           AsOfIn(1, new Timestamp(base + 300), 0, 11, 0.0),  // probe  @300 (tie)
           AsOfIn(1, new Timestamp(base + 50), 0, 12, 0.0),   // probe before any version
+          AsOfIn(1, new Timestamp(base + 250), 0, 13, 0.0),  // 2nd probe @250, buffered
           AsOfIn(2, new Timestamp(base + 400), 0, 20, 0.0))  // other key, no versions
     )).map(o => o.id -> ((o.asofTs, o.asofV))).toMap
     assert(out(10L) === ((Some(base + 100), Some(1.0))))
+    assert(out(13L) === ((Some(base + 100), Some(1.0))))
     assert(out(11L) === ((Some(base + 300), Some(2.0)))) // simultaneous matches
     assert(out(12L) === ((None, None)))
     assert(out(20L) === ((None, None)))

@@ -60,7 +60,7 @@ class SeriesStreamSpec extends SparkSpec {
 
   test("transformWithState islands seal at the watermark and match batch") {
     val s = spark
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -95,12 +95,12 @@ class SeriesStreamSpec extends SparkSpec {
           (1L, 0L, 20000000L, 2L), (1L, 30000000L, 35000000L, 1L),
           (2L, 0L, 32000000L, 2L), (2L, 40000000L, 45000000L, 1L)))
       } finally q.stop()
-    }
+    })
   }
 
   test("interval state survives a checkpointed query restart") {
     val s = spark
-    withRocksDb {
+    withoutTimerWarnings(withRocksDb {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -135,7 +135,7 @@ class SeriesStreamSpec extends SparkSpec {
         .map(o => (o.startUs - base, o.endUs - base, o.nEvents)).toSet
       assert(rows === Set((0L, 20000000L, 2L)),
         s"restored state did not merge: $rows")
-    }
+    })
   }
 
   test("q124 twin: day-partials folded per batch report identical " +

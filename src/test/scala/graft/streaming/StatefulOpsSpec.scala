@@ -5,11 +5,6 @@ import graft.streaming.Model._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{Logger => CoreLogger,
-  LogEvent => CoreLogEvent}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 
 /** The keyed-state operators over MemoryStream fixtures. Each test ends
   * with a far-future sentinel event that advances the watermark past every
@@ -26,28 +21,6 @@ class StatefulOpsSpec extends SparkSpec {
       .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(120000L), s"bounded run $name did not finish")
     finally q.stop()
-  }
-
-  /** Runs `body` and asserts that Spark's timer store logged no "Failed to
-    * delete/register timer" line meanwhile: the ordered-drain processors
-    * register or delete a timer only when it is known absent or present. */
-  private def withoutTimerWarnings(body: => Unit): Unit = {
-    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("timer-warnings", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: CoreLogEvent): Unit = {
-        val m = e.getMessage.getFormattedMessage
-        if (m.startsWith("Failed to")) failed.add(m)
-      }
-    }
-    appender.start()
-    val logger = LogManager.getLogger("org.apache.spark.sql.execution." +
-      "streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
-      .asInstanceOf[CoreLogger]
-    logger.addAppender(appender)
-    try body
-    finally { logger.removeAppender(appender); appender.stop() }
-    assert(failed.isEmpty)
   }
 
   test("T1 visitorRepair: is_new rewritten on later-day repeat (batch mode)") {
