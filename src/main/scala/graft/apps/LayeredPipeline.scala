@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.sources.{Kafka, LocalFs}
 import graft.streaming.VersionedState
+import org.apache.spark.sql.graft.SessionArtifacts
 
 /** The reference's DEPLOYMENT shape, not just its operators: N
   * independent jobs handing off through Kafka topics —
@@ -50,12 +51,26 @@ import graft.streaming.VersionedState
   * session it is given, so the checkpoint, ledger, state and RocksDB
   * files of a chain on local disk are written without a process fork per
   * file.
+  *
+  * Every hop's stream runs in a session cloned from the caller's at
+  * `start()`, and that clone is made without Spark's per-session
+  * artifact isolation (`spark.sql.artifact.isolation.enabled`,
+  * [[SessionArtifacts]]). An isolated session runs its tasks under its
+  * own executor class loader, and `CodeGenerator`'s cache is keyed by
+  * class loader, so isolated hops would each compile the same generated
+  * code again. With isolation off, all hops share one class loader and
+  * one set of cache entries; the chain adds no session artifacts, so
+  * isolation would give it nothing. Each hop's `foreachBatch` body runs
+  * on the batch's own session (the clone). The caller's session keeps
+  * its isolation, so the publishers and [[Serve]] run as before.
   */
 object LayeredPipeline {
 
-  private def onLocalFs[T](s: SparkSession)(body: => T): T = {
+  /** Builds and starts a hop on the fork-free local filesystem, in a
+    * stream session without artifact isolation. */
+  private def hop[T](s: SparkSession)(body: => T): T = {
     LocalFs.install(s)
-    body
+    SessionArtifacts.unisolatedClones(s)(body)
   }
 
   /** One ledger topic's records parsed with `ddl` into the struct
@@ -75,29 +90,33 @@ object LayeredPipeline {
     Kafka.exactlyOnceDynamicTopicSink(records(df, topic), ledger, checkpoint)
       .start()
 
-  private def emptyState(s: SparkSession, ddl: String): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
+  private def emptyState(s: SparkSession, schema: StructType): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
 
   /** Folds each micro-batch of `in` into the [[VersionedState]] at
-    * `stateDir` (schema `ddl`) with `merge`, one transaction per batch. */
-  private def foldInto(s: SparkSession, in: DataFrame, stateDir: String,
-                       ddl: String, checkpoint: String)(
+    * `stateDir` (of `schema`) with `merge`, one transaction per batch. */
+  private def foldInto(in: DataFrame, stateDir: String, schema: StructType,
+                       checkpoint: String)(
       merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
     in.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      VersionedState.applyBatch(s, stateDir, id, b, emptyState(s, ddl), merge)
+      val bs = b.sparkSession
+      VersionedState.applyBatch(bs, stateDir, id, b, emptyState(bs, schema),
+        merge)
       (): Unit
     }.option("checkpointLocation", checkpoint).start()
 
-  private val GmvDdl = "day STRING, gmv DECIMAL(38,2), order_ct BIGINT"
-  private val KwDdl = "keyword STRING, ct BIGINT"
-  private val VisitorDdl = "day STRING, uv_ct BIGINT, uj_ct BIGINT"
+  private val GmvSchema = StructType.fromDDL(
+    "day STRING, gmv DECIMAL(38,2), order_ct BIGINT")
+  private val KwSchema = StructType.fromDDL("keyword STRING, ct BIGINT")
+  private val VisitorSchema = StructType.fromDDL(
+    "day STRING, uv_ct BIGINT, uj_ct BIGINT")
 
   /** ODS JSON carries its CDC table tag; DWD topic is a pure routing
     * projection of it (BaseDBApp's TableProcess routing, X2, collapsed to
     * the three tables this chain consumes). */
   def odsToDwd(ods: DataFrame, dwdLedger: String,
                checkpoint: String): StreamingQuery =
-    onLocalFs(ods.sparkSession)(Kafka.exactlyOnceDynamicTopicSink(
+    hop(ods.sparkSession)(Kafka.exactlyOnceDynamicTopicSink(
       ods.select(
         when(get_json_object(col("value"), "$.tbl") === "order_info",
           lit("dwd_order_info"))
@@ -121,7 +140,7 @@ object LayeredPipeline {
     * event day, produce exactly-once to the DWM ledger. */
   def dwdOrdersToDwm(s: SparkSession, dwdLedger: String, dimDir: String,
                      dwmLedger: String,
-                     checkpoint: String): StreamingQuery = onLocalFs(s) {
+                     checkpoint: String): StreamingQuery = hop(s) {
     val orders = parsedTopic(s, dwdLedger, "dwd_order_info",
       "o_orderkey BIGINT, o_custkey BIGINT, " +
         "o_orderdate TIMESTAMP, o_totalprice DECIMAL(18,2)", "o")
@@ -129,7 +148,7 @@ object LayeredPipeline {
     orders.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
       // dim snapshot read per micro-batch (S5's config-poll discipline);
       // broadcast: the dim is customer-dimension-sized, never the fact
-      val dim = s.read.parquet(dimDir)
+      val dim = b.sparkSession.read.parquet(dimDir)
         .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
       val wide = b.join(broadcast(dim), Seq("o_custkey"), "left")
         .select(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),
@@ -167,7 +186,7 @@ object LayeredPipeline {
   def dwdVisitsToUv(s: SparkSession, dwdLedger: String, dwmLedger: String,
                     checkpoint: String,
                     wmSentinel: String = "__wm__"): StreamingQuery =
-      onLocalFs(s) {
+      hop(s) {
     val uv = graft.streaming.StatefulOps
       .uniqueVisit(visitStream(s, dwdLedger))
       .toDF().filter(col("mid") =!= wmSentinel)
@@ -181,7 +200,7 @@ object LayeredPipeline {
   def dwdVisitsToJump(s: SparkSession, dwdLedger: String, dwmLedger: String,
                       checkpoint: String, gapMs: Long = 600000L,
                       wmSentinel: String = "__wm__"): StreamingQuery =
-      onLocalFs(s) {
+      hop(s) {
     val jumps = graft.streaming.StatefulOps
       .userJump(visitStream(s, dwdLedger), gapMs)
       .toDF().filter(col("mid") =!= wmSentinel)
@@ -200,14 +219,14 @@ object LayeredPipeline {
   def dwmVisitsToVisitorState(s: SparkSession, uvLedger: String,
                               jumpLedger: String, stateDir: String,
                               checkpoint: String): StreamingQuery =
-      onLocalFs(s) {
+      hop(s) {
     def dayRows(ledger: String, topic: String, uv: Int, uj: Int) =
       parsedTopic(s, ledger, topic, "mid STRING, ts TIMESTAMP")
         .select(date_format(col("r.ts"), "yyyy-MM-dd").as("day"),
           lit(uv.toLong).as("uv_ct"), lit(uj.toLong).as("uj_ct"))
-    foldInto(s, dayRows(uvLedger, "dwm_unique_visit", 1, 0)
+    foldInto(dayRows(uvLedger, "dwm_unique_visit", 1, 0)
         .unionByName(dayRows(jumpLedger, "dwm_user_jump", 0, 1)),
-        stateDir, VisitorDdl, checkpoint) { (st, bt) =>
+        stateDir, VisitorSchema, checkpoint) { (st, bt) =>
       st.unionByName(bt)
         .groupBy(col("day")).agg(sum(col("uv_ct")).as("uv_ct"),
           sum(col("uj_ct")).as("uj_ct"))
@@ -217,9 +236,10 @@ object LayeredPipeline {
   /** Materialize the visitor state as the dws_visitor_stats table
     * [[Serve]] registers (stt = day start, the publisher's grain). */
   def publishVisitorDws(s: SparkSession, visitorStateDir: String,
-                        warehouseDir: String): Unit = onLocalFs(s) {
+                        warehouseDir: String): Unit = {
+    LocalFs.install(s)
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, visitorStateDir, emptyState(s, VisitorDdl))
+      VersionedState.readAs(s, visitorStateDir, VisitorSchema)
         .select(to_timestamp(col("day")).as("stt"), col("uv_ct"),
           col("uj_ct")),
       s"$warehouseDir/dws_visitor_stats")
@@ -230,10 +250,10 @@ object LayeredPipeline {
     * serves (toYYYYMMDD(stt)). Exact decimal sums; a replayed batchId is
     * a no-op by the state protocol. */
   def dwmToGmvState(s: SparkSession, dwmLedger: String, stateDir: String,
-                    checkpoint: String): StreamingQuery = onLocalFs(s) {
-    foldInto(s, parsedTopic(s, dwmLedger, "dwm_order_wide",
+                    checkpoint: String): StreamingQuery = hop(s) {
+    foldInto(parsedTopic(s, dwmLedger, "dwm_order_wide",
         "day STRING, o_totalprice DECIMAL(18,2)").select(col("r.*")),
-        stateDir, GmvDdl, checkpoint) { (st, bt) =>
+        stateDir, GmvSchema, checkpoint) { (st, bt) =>
       st.unionByName(bt.select(col("day"),
           col("o_totalprice").cast("decimal(38,2)").as("gmv"),
           lit(1L).as("order_ct")))
@@ -248,12 +268,12 @@ object LayeredPipeline {
   def dwdLogsToKeywordState(s: SparkSession, dwdLedger: String,
                             stateDir: String,
                             checkpoint: String): StreamingQuery =
-      onLocalFs(s) {
-    foldInto(s, parsedTopic(s, dwdLedger, "dwd_page_log",
+      hop(s) {
+    foldInto(parsedTopic(s, dwdLedger, "dwd_page_log",
         "doc_id BIGINT, text STRING")
         .select(explode(graft.functions.Text.tokens(col("r.text")))
           .as("keyword")),
-        stateDir, KwDdl, checkpoint) { (st, bt) =>
+        stateDir, KwSchema, checkpoint) { (st, bt) =>
       st.unionByName(bt.select(col("keyword"), lit(1L).as("ct")))
         .groupBy(col("keyword")).agg(sum(col("ct")).as("ct"))
     }
@@ -265,15 +285,15 @@ object LayeredPipeline {
     * stamps keyword rows (the reference's window start). */
   def publishDws(s: SparkSession, gmvStateDir: String, kwStateDir: String,
                  warehouseDir: String,
-                 panelStt: String = "2021-02-27 10:00:00"): Unit =
-      onLocalFs(s) {
+                 panelStt: String = "2021-02-27 10:00:00"): Unit = {
+    LocalFs.install(s)
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, gmvStateDir, emptyState(s, GmvDdl))
+      VersionedState.readAs(s, gmvStateDir, GmvSchema)
         .select(to_timestamp(col("day")).as("stt"), lit(0L).as("sku_id"),
           col("gmv").as("order_amount"), col("order_ct")),
       s"$warehouseDir/dws_product_stats")
     graft.sinks.Warehouse.writeDws(
-      VersionedState.read(s, kwStateDir, emptyState(s, KwDdl))
+      VersionedState.readAs(s, kwStateDir, KwSchema)
         .select(to_timestamp(lit(panelStt)).as("stt"), col("keyword"),
           col("ct"), lit("SEARCH").as("source")),
       s"$warehouseDir/dws_keyword_stats")

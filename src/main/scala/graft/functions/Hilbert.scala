@@ -120,7 +120,9 @@ object Hilbert {
     * sorted index jumps by more than 1. */
   def curveRunsAudit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = boxCells(s, dir).persist()
+    // not persisted: both curves read it through one reused exchange, and
+    // a persisted frame would stay cached after the query
+    val cells = boxCells(s, dir)
     val h = withHilbert(cells, "cx", "cy").select(lit("hilbert").as("curve"),
       col("d"))
     val m = cells.select(lit("morton").as("curve"),

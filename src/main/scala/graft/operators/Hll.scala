@@ -112,7 +112,9 @@ object Hll {
     val base = Tables.load(s, dir, "events")
       .select(date_format(timestamp_seconds(expr("ts div 1000000000")),
         "yyyy-MM-dd").as("grp"), col("user_id").as("id"))
-    val perGroup = registers(base).persist()
+    // not persisted: the two uses below share one shuffle through exchange
+    // reuse, and a persisted frame would stay cached after the query
+    val perGroup = registers(base)
     // union sketch: max-merge of the per-group registers — no rescan
     val merged = perGroup.groupBy(col("bucket"))
       .agg(max(col("reg")).as("reg"))

@@ -25,6 +25,12 @@ object StatefulOps {
     .withZone(java.time.ZoneOffset.UTC)
   private[streaming] def dayOf(ts: Timestamp): String = dayFmt.format(ts.toInstant)
 
+  // state encoders, derived by reflection once per JVM rather than in every
+  // processor `init` (once per partition per batch)
+  private lazy val jumpEncoder = Encoders.product[Jump]
+  private lazy val bufEncoder =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[LogEvent]]()
+
   /** T2 — CEP jump-out detection (UserJumpApp.java:88-158): a session
     * entry (empty last_page_id) NOT followed by any page event within
     * `gapMs` is a jump. The pending entry's event-time timer firing IS the
@@ -35,7 +41,7 @@ object StatefulOps {
     @transient private var pending: org.apache.spark.sql.streaming.ValueState[Jump] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      pending = getHandle.getValueState[Jump]("pending", Encoders.product[Jump], TTLConfig.NONE)
+      pending = getHandle.getValueState[Jump]("pending", jumpEncoder, TTLConfig.NONE)
 
     override def handleInputRows(mid: String, rows: Iterator[LogEvent],
                                  tv: TimerValues): Iterator[Jump] = {
@@ -90,9 +96,6 @@ object StatefulOps {
   // waits for the watermark to pass the event (the price of total order
   // under out-of-order input — the same contract the reference's CEP/state
   // TTL operators have).
-
-  private def bufEncoder =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[LogEvent]]()
 
   /** Shared shape: buffer rows by event-time ms, drain in timer order.
     * Idle-key expiry is an EVENT-TIME cleanup timer at (last drained ts +

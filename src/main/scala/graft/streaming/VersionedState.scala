@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Transactional versioned state for foreachBatch merges — the
   * exactly-once guard the parquet read-modify-write twins (ScdStream,
@@ -26,9 +27,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (two survivors bound the storage while keeping the crash-recovery
   *    parent alive).
   *
-  * At 100 TB the same protocol holds with a manifest instead of
-  * directory listing; the state write is the incremental O(batch) delta
-  * the individual twins already guarantee. */
+  * Each version is a full copy: `applyBatch` writes `merge(prior, batch)`
+  * whole, so a merge that unions the parent with the batch (as all of
+  * `LayeredPipeline`'s do) costs O(state) per batch, not O(batch). An
+  * O(batch) write would need the state split into key buckets and a
+  * per-version manifest mapping each bucket to the version that last
+  * wrote it, in place of the directory listing. */
 object VersionedState {
 
   private def fs(s: SparkSession, path: String) =
@@ -88,6 +92,14 @@ object VersionedState {
     latestVersion(s, path) match {
       case Some(v) => s.read.parquet(s"$path/v=$v")
       case None    => empty
+    }
+
+  /** The latest committed state frame read with its known `schema`, so no
+    * footer-inference job runs, or an empty frame of `schema` if none. */
+  def readAs(s: SparkSession, path: String, schema: StructType): DataFrame =
+    latestVersion(s, path) match {
+      case Some(v) => s.read.schema(schema).parquet(s"$path/v=$v")
+      case None    => s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
     }
 
   /** Apply `merge(prior, batch)` for `batchId` exactly once: a replayed
