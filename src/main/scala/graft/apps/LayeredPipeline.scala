@@ -110,6 +110,8 @@ object LayeredPipeline {
   private val KwSchema = StructType.fromDDL("keyword STRING, ct BIGINT")
   private val VisitorSchema = StructType.fromDDL(
     "day STRING, uv_ct BIGINT, uj_ct BIGINT")
+  private val DimSchema = StructType.fromDDL(
+    "c_custkey BIGINT, c_mktsegment STRING")
 
   /** ODS JSON carries its CDC table tag; DWD topic is a pure routing
     * projection of it (BaseDBApp's TableProcess routing, X2, collapsed to
@@ -146,9 +148,10 @@ object LayeredPipeline {
         "o_orderdate TIMESTAMP, o_totalprice DECIMAL(18,2)", "o")
       .select(col("o.*"))
     orders.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      // dim snapshot read per micro-batch (S5's config-poll discipline);
+      // dim snapshot read per micro-batch (S5's config-poll discipline),
+      // with the schema of the columns used: no footer-inference job;
       // broadcast: the dim is customer-dimension-sized, never the fact
-      val dim = b.sparkSession.read.parquet(dimDir)
+      val dim = b.sparkSession.read.schema(DimSchema).parquet(dimDir)
         .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
       val wide = b.join(broadcast(dim), Seq("o_custkey"), "left")
         .select(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),

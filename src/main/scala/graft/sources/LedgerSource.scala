@@ -63,6 +63,9 @@ class LedgerSource(s: SparkSession, ledger: String, topic: String)
   }
 
   override def stop(): Unit = ()
+
+  /** The source's description in streaming progress: names the topic. */
+  override def toString: String = s"LedgerSource[$topic]"
 }
 
 object LedgerSource {

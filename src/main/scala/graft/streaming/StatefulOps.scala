@@ -30,6 +30,7 @@ object StatefulOps {
   private lazy val jumpEncoder = Encoders.product[Jump]
   private lazy val bufEncoder =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[LogEvent]]()
+  private lazy val eventEncoder = Encoders.product[LogEvent]
 
   /** T2 — CEP jump-out detection (UserJumpApp.java:88-158): a session
     * entry (empty last_page_id) NOT followed by any page event within
@@ -82,50 +83,50 @@ object StatefulOps {
       .transformWithState(new JumpProcessor(gapMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
-  // ---- ordered drain without buffering (T1/F2) ----------------------------
+  // ---- ordered drain without buffering (T1) ------------------------------
   //
   // Sorting a key's rows per trigger (`rows.toSeq.sortBy`) costs
   // O(events per key per trigger) heap — a hot key would buffer its whole
-  // trigger. Here the TIMER QUEUE is the sorter: incoming rows land in a
-  // MapState keyed by their event-time millisecond (RocksDB-backed —
-  // backlog lives in the state store, not on the heap), one event-time
-  // timer is registered per distinct timestamp, and Spark fires timers in
-  // expiry order as the watermark advances. The drain therefore sees
-  // events in event-time order with per-step memory bounded by the events
-  // sharing ONE millisecond, regardless of how hot the key is. Emission
-  // waits for the watermark to pass the event (the price of total order
-  // under out-of-order input — the same contract the reference's CEP/state
-  // TTL operators have).
+  // trigger. T1 needs every event in event-time order (each one is
+  // emitted, repaired or not), so there the TIMER QUEUE is the sorter:
+  // incoming rows land in a MapState keyed by their event-time millisecond
+  // (RocksDB-backed — backlog lives in the state store, not on the heap),
+  // one event-time timer is registered per distinct timestamp, and Spark
+  // fires timers in expiry order as the watermark advances. The drain
+  // therefore sees events in event-time order with per-step memory bounded
+  // by the events sharing ONE millisecond, regardless of how hot the key
+  // is. Emission waits for the watermark to pass the event (the price of
+  // total order under out-of-order input — the same contract the
+  // reference's CEP/state TTL operators have). F2 emits one event per
+  // (mid, day) and keeps its own state at that grain (UniqueVisitProcessor).
 
-  /** Shared shape: buffer rows by event-time ms, drain in timer order.
-    * Idle-key expiry is an EVENT-TIME cleanup timer at (last drained ts +
-    * ttlMs) — TTLConfig is processing-time-only and rejected in EventTime
-    * mode. */
-  abstract class OrderedDrainProcessor[O]
-      extends StatefulProcessor[String, LogEvent, O] {
-    @transient protected var buf:
+  /** T1 — new/old-visitor repair (BaseLogAPP.java:74-130). State:
+    * first-visit day per mid; an `is_new=1` event on a later day than the
+    * recorded first visit is rewritten to `is_new=0`. Rows are buffered by
+    * event-time ms and drained in timer order (above). State is evicted 30
+    * idle days after the mid's last drained event (a client returning
+    * after >30 idle days claiming is_new=1 escapes repair — the accepted
+    * trade of any TTL'd state, cf. UniqueVisitApp's 1-day TTL). Idle-key
+    * expiry is an EVENT-TIME cleanup timer at (last drained ts + 30 days)
+    * — TTLConfig is processing-time-only and rejected in EventTime mode. */
+  class VisitorRepairProcessor
+      extends StatefulProcessor[String, LogEvent, RepairedEvent] {
+    @transient private var buf:
       org.apache.spark.sql.streaming.MapState[Long, Array[LogEvent]] = _
     @transient private var cleanupAt:
       org.apache.spark.sql.streaming.ValueState[Long] = _
+    @transient private var firstDay:
+      org.apache.spark.sql.streaming.ValueState[String] = _
 
-    /** Idle eviction horizon for the op's value state. */
-    protected def ttlMs: Long
-    /** Pre-buffer filter: rows failing it are never stored. */
-    protected def keep(e: LogEvent): Boolean = true
-    /** Initialize op-specific value state. */
-    protected def initOp(): Unit
-    /** Clear op-specific value state (idle TTL fired). */
-    protected def clearOp(): Unit
-    /** Process the events of one drained timestamp (already watermark-safe,
-      * event-time ordered across calls). */
-    protected def drain(mid: String, events: Array[LogEvent]): Iterator[O]
+    private val ttlMs = 30L * 86400000L
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       buf = getHandle.getMapState[Long, Array[LogEvent]](
         "buf", Encoders.scalaLong, bufEncoder, TTLConfig.NONE)
       cleanupAt = getHandle.getValueState[Long]("cleanupAt",
         Encoders.scalaLong, TTLConfig.NONE)
-      initOp()
+      firstDay = getHandle.getValueState[String]("firstDay", Encoders.STRING,
+        TTLConfig.NONE)
     }
 
     // Timers are keyed (key, expiry): one timer can serve a drain timestamp
@@ -136,21 +137,19 @@ object StatefulOps {
     // a Spark WARN, so both calls below keep to that set.
 
     override def handleInputRows(mid: String, rows: Iterator[LogEvent],
-                                 tv: TimerValues): Iterator[O] = {
+                                 tv: TimerValues): Iterator[RepairedEvent] = {
       rows.foreach { e =>
-        if (keep(e)) {
-          val t = e.ts.getTime
-          val cur = buf.getValue(t)
-          buf.updateValue(t, if (cur == null) Array(e) else cur :+ e)
-          if (cur == null && !(cleanupAt.exists() && cleanupAt.get() == t))
-            getHandle.registerTimer(t)
-        }
+        val t = e.ts.getTime
+        val cur = buf.getValue(t)
+        buf.updateValue(t, if (cur == null) Array(e) else cur :+ e)
+        if (cur == null && !(cleanupAt.exists() && cleanupAt.get() == t))
+          getHandle.registerTimer(t)
       }
       Iterator.empty
     }
 
     override def handleExpiredTimer(mid: String, tv: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[O] = {
+                                    expired: ExpiredTimerInfo): Iterator[RepairedEvent] = {
       val t = expired.getExpiryTimeInMs()
       val evs = buf.getValue(t)
       if (evs == null) {
@@ -162,7 +161,7 @@ object StatefulOps {
         // unrepaired). The pending drain reschedules the horizon when it
         // fires.
         if (cleanupAt.exists() && cleanupAt.get() == t) {
-          if (!buf.exists()) clearOp()
+          if (!buf.exists()) firstDay.clear()
           cleanupAt.clear()
         }
         Iterator.empty
@@ -184,30 +183,13 @@ object StatefulOps {
         val next = t + ttlMs
         if (!buf.containsKey(next)) getHandle.registerTimer(next)
         cleanupAt.update(next)
-        drain(mid, evs)
+        drain(evs)
       }
     }
-  }
 
-  /** T1 — new/old-visitor repair (BaseLogAPP.java:74-130). State:
-    * first-visit day per mid; an `is_new=1` event on a later day than the
-    * recorded first visit is rewritten to `is_new=0`. State is evicted 30
-    * idle days after the mid's last drained event (a client returning
-    * after >30 idle days claiming is_new=1 escapes repair — the accepted
-    * trade of any TTL'd state, cf. UniqueVisitApp's 1-day TTL). */
-  class VisitorRepairProcessor
-      extends OrderedDrainProcessor[RepairedEvent] {
-    @transient private var firstDay:
-      org.apache.spark.sql.streaming.ValueState[String] = _
-
-    override protected def ttlMs: Long = 30L * 86400000L
-    override protected def clearOp(): Unit = firstDay.clear()
-    override protected def initOp(): Unit =
-      firstDay = getHandle.getValueState[String]("firstDay", Encoders.STRING,
-        TTLConfig.NONE)
-
-    override protected def drain(mid: String,
-                                 events: Array[LogEvent]): Iterator[RepairedEvent] = {
+    /** Repairs the events of one drained timestamp (already
+      * watermark-safe, event-time ordered across calls). */
+    private def drain(events: Array[LogEvent]): Iterator[RepairedEvent] = {
       var fd = if (firstDay.exists()) firstDay.get() else null
       val out = events.map { e =>
         val d = dayOf(e.ts)
@@ -233,34 +215,110 @@ object StatefulOps {
   }
 
   /** F2 — UV / first-visit-per-day dedup (UniqueVisitApp.java:69-124):
-    * mid-session events (with a last_page_id, UniqueVisitApp.java:74-78)
-    * are dropped before buffering; only the first session entry per
-    * (mid, day) survives. State: last emitted day, evicted 1 idle day
-    * after the last drain
-    * (event-time cleanup timer — the reference's 1-day TTL,
-    * UniqueVisitApp.java:85-89). */
-  class UniqueVisitProcessor extends OrderedDrainProcessor[LogEvent] {
+    * only the first session entry per (mid, day) survives; mid-session
+    * events (with a last_page_id, UniqueVisitApp.java:74-78) are dropped
+    * on arrival. State per mid is at the (mid, day) grain:
+    *   - `lastDay`: the last emitted day; entries of that day or earlier
+    *     are dropped on arrival;
+    *   - `pending`: day → the earliest entry of that day not yet passed
+    *     by the watermark, with one event-time timer at its timestamp;
+    *     when it fires the entry is emitted and becomes `lastDay`;
+    *   - `cleanupAt`: the idle horizon, 1 day after the last emit (the
+    *     reference's 1-day TTL on write, UniqueVisitApp.java:85-89).
+    * Per key per trigger only the earliest entry of each day is kept
+    * (ties: first arrival), so heap and state are O(days), not O(events).
+    *
+    * Emission matches a drain of every entry in event-time order: the
+    * earliest entry of a day is emitted once the watermark passes it, and
+    * an entry accepted later cannot be earlier than one already emitted —
+    * the late-event filter drops it. */
+  class UniqueVisitProcessor extends StatefulProcessor[String, LogEvent, LogEvent] {
     @transient private var lastDay:
       org.apache.spark.sql.streaming.ValueState[String] = _
+    @transient private var pending:
+      org.apache.spark.sql.streaming.MapState[String, LogEvent] = _
+    @transient private var cleanupAt:
+      org.apache.spark.sql.streaming.ValueState[Long] = _
 
-    override protected def ttlMs: Long = 86400000L
-    override protected def clearOp(): Unit = lastDay.clear()
-    override protected def keep(e: LogEvent): Boolean =
-      e.lastPageId == null || e.lastPageId.isEmpty
+    private val ttlMs = 86400000L
 
-    override protected def initOp(): Unit =
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       lastDay = getHandle.getValueState[String]("lastDay", Encoders.STRING,
         TTLConfig.NONE)
+      pending = getHandle.getMapState[String, LogEvent]("pending",
+        Encoders.STRING, eventEncoder, TTLConfig.NONE)
+      cleanupAt = getHandle.getValueState[Long]("cleanupAt",
+        Encoders.scalaLong, TTLConfig.NONE)
+    }
 
-    override protected def drain(mid: String,
-                                 events: Array[LogEvent]): Iterator[LogEvent] = {
-      var ld = if (lastDay.exists()) lastDay.get() else null
-      val out = events.flatMap { e =>
-        val d = dayOf(e.ts)
-        if (d != ld) { ld = d; Some(e) } else None
+    // A key's timers are its pending entries' timestamps (one per day, so
+    // distinct), its current horizon and superseded horizons at or below
+    // the watermark. A pending entry and the horizon can share one timer;
+    // as in T1, each register/delete below keeps to that set.
+
+    private def horizon: Long = if (cleanupAt.exists()) cleanupAt.get() else Long.MinValue
+
+    private def pendingAt(t: Long): Boolean = {
+      val p = pending.getValue(dayOf(new Timestamp(t)))
+      p != null && p.ts.getTime == t
+    }
+
+    override def handleInputRows(mid: String, rows: Iterator[LogEvent],
+                                 tv: TimerValues): Iterator[LogEvent] = {
+      val ld = if (lastDay.exists()) lastDay.get() else null
+      val first = scala.collection.mutable.HashMap.empty[String, LogEvent]
+      rows.foreach { e =>
+        if (e.lastPageId == null || e.lastPageId.isEmpty) {
+          val d = dayOf(e.ts)
+          if (ld == null || d > ld) first.get(d) match {
+            case Some(f) if f.ts.getTime <= e.ts.getTime =>
+            case _ => first.update(d, e)
+          }
+        }
       }
-      if (ld != null) lastDay.update(ld)
-      out.iterator
+      if (first.nonEmpty) {
+        val h = horizon
+        first.foreach { case (d, e) =>
+          val t = e.ts.getTime
+          val cur = pending.getValue(d)
+          if (cur == null || t < cur.ts.getTime) {
+            if (cur != null && cur.ts.getTime != h)
+              getHandle.deleteTimer(cur.ts.getTime)
+            pending.updateValue(d, e)
+            if (t != h) getHandle.registerTimer(t)
+          }
+        }
+      }
+      Iterator.empty
+    }
+
+    override def handleExpiredTimer(mid: String, tv: TimerValues,
+                                    expired: ExpiredTimerInfo): Iterator[LogEvent] = {
+      val t = expired.getExpiryTimeInMs()
+      val d = dayOf(new Timestamp(t))
+      val p = pending.getValue(d)
+      if (p != null && p.ts.getTime == t) {
+        pending.removeKey(d)
+        lastDay.update(d)
+        // slide the horizon past this emit, by T1's rules: the old one is
+        // deleted only while it is a timer of its own that cannot fire in
+        // this batch; the new one only when no pending entry owns it
+        if (cleanupAt.exists()) {
+          val old = cleanupAt.get()
+          if (old != t && old > tv.getCurrentWatermarkInMs() && !pendingAt(old))
+            getHandle.deleteTimer(old)
+        }
+        val next = t + ttlMs
+        if (!pendingAt(next)) getHandle.registerTimer(next)
+        cleanupAt.update(next)
+        Iterator.single(p)
+      } else {
+        // the current horizon: every entry of `lastDay` is now behind the
+        // watermark, so the late-event filter stands in for the state
+        // (pending days are all later than `lastDay`)
+        if (horizon == t) { lastDay.clear(); cleanupAt.clear() }
+        Iterator.empty
+      }
     }
   }
 

@@ -221,8 +221,9 @@ class StatefulOpsSpec extends SparkSpec {
       val day1 = 1700000000000L
       val day2 = day1 + 86400000L
       // one hot mid, 4000 session entries over two days, distinct
-      // timestamps — a per-trigger sort would buffer all of them on the
-      // heap; the ordered drain takes them one timestamp at a time
+      // timestamps, in one trigger — a per-trigger sort would buffer all
+      // of them on the heap; F2 keeps only the earliest entry of each day
+      // (two pending entries, two timers)
       val evs = (0 until 4000).map { i =>
         val base = if (i % 2 == 0) day1 else day2
         LogEvent("hot", "home", null, "1", ts(base + i * 7L))
@@ -242,6 +243,140 @@ class StatefulOpsSpec extends SparkSpec {
         assert(got.length === 2)
         assert(got.map(e => StatefulOps.dayOf(e.ts)).toSet.size === 2)
         assert(got.map(_.ts.getTime).toSet === Set(day1, day2 + 7L))
+      } finally q.stop()
+    })
+  }
+
+  /** The F2 reference model: per (mid, day), the earliest session entry
+    * the late-event filter accepts (ties: first arrival). `triggers` are
+    * added one micro-batch each; an event is late when its ts is at or
+    * below the watermark left by the earlier batches (max ts seen minus
+    * `delayMs`). */
+  private def uvModel(triggers: Seq[Seq[LogEvent]], delayMs: Long): Set[LogEvent] = {
+    var wm = 0L
+    val first = scala.collection.mutable.LinkedHashMap.empty[(String, String), LogEvent]
+    triggers.foreach { batch =>
+      batch.foreach { e =>
+        val isEntry = e.lastPageId == null || e.lastPageId.isEmpty
+        if (isEntry && e.ts.getTime > wm) {
+          val k = (e.mid, StatefulOps.dayOf(e.ts))
+          if (first.get(k).forall(_.ts.getTime > e.ts.getTime)) first(k) = e
+        }
+      }
+      if (batch.nonEmpty) wm = math.max(wm, batch.map(_.ts.getTime).max - delayMs)
+    }
+    first.values.toSet
+  }
+
+  /** Runs `triggers` through F2, one processed micro-batch each, then a
+    * far-future non-entry that fires every timer; returns the output. */
+  private def uvRun(name: String, triggers: Seq[Seq[LogEvent]]): Set[LogEvent] = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val input = MemoryStream[LogEvent]
+    val q = StatefulOps.uniqueVisit(input.toDS().withWatermark("ts", "1 second"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    try {
+      val end = triggers.flatten.map(_.ts.getTime).max + 10 * 86400000L
+      (triggers :+ Seq(LogEvent("zz", "home", "x", "0", ts(end)))).foreach { b =>
+        input.addData(b: _*)
+        q.processAllAvailable()
+      }
+      s.table(name).as[LogEvent].collect().filter(_.mid != "zz").toSet
+    } finally q.stop()
+  }
+
+  test("F2 uniqueVisit equals the earliest accepted entry per (mid, day) across triggers") {
+    withoutTimerWarnings(withRocksDb {
+      val day = 86400000L
+      val midnight = (1700000000000L / day + 1) * day // 2023-11-15T00:00Z
+      def entry(mid: String, page: String, t: Long, last: String = null) =
+        LogEvent(mid, page, last, "1", ts(midnight + t))
+      // each trigger moves the watermark to (its max ts - 1 s); the
+      // comments give the watermark the trigger is filtered against
+      val crafted = Seq(
+        Seq( // wm 0
+          entry("a", "a2", 200), entry("a", "a1", -500),   // midnight straddle, day2 first
+          entry("b", "b1", 5000), entry("b", "b2", 5000),  // same ms: first arrival wins
+          entry("c", "c0", 100, last = "home"),            // non-entry: dropped
+          entry("c", "c1", 3000),
+          entry("d", "d1", 10000), entry("d", "d0", 9000), // out of order in one trigger
+          entry("g", "g1", 100), entry("i", "i1", 1000),
+          entry("w", "w", 10001, last = "x")),
+        Seq( // wm 9001
+          entry("b", "b3", 9700),                          // b's day already emitted
+          entry("e", "e1", 9800), entry("f", "f1", 9900),
+          entry("w", "w", 10500, last = "x")),
+        Seq( // wm 9500
+          entry("e", "e0", 9600),                          // earlier than pending e1
+          entry("f", "f2", 9900),                          // same ms as f1, later trigger
+          entry("d", "d2", 9400)),                         // late: dropped
+        Seq( // wm 9500
+          entry("g", "g2", day + 100),                     // at g's idle horizon
+          entry("g", "g3", day + 150)),
+        Seq( // wm day - 850
+          entry("g", "g2b", day + 50),                     // replaces g2, horizon timer kept
+          entry("w", "w", day + 3000, last = "x")),
+        Seq( // wm day + 2000: the horizons of a and i have passed
+          entry("i", "i2", day + 2500),                    // i returns after its state expired
+          entry("a", "a3", day + 40000),
+          entry("c", "c2", day - 100)))                    // late: dropped
+      val craftedWant = uvModel(crafted, 1000L)
+      assert(craftedWant.map(_.pageId) === Set("a1", "a2", "a3", "b1", "c1", "d0",
+        "e0", "f1", "g1", "g2b", "i1", "i2"))
+      assert(uvRun("uv_eq_crafted", crafted) === craftedWant)
+
+      // seeded random triggers: mixed entries (null or "" last page) and
+      // non-entries on a 1-minute grid (same-ms ties), out of order and
+      // partly behind the watermark, and one 30-hour gap that lets idle
+      // horizons fire. Timestamps are 7 ms past a minute and watermarks
+      // 993 ms before one, so no event sits exactly on a watermark.
+      val rnd = new scala.util.Random(7)
+      var base = midnight - 3 * 3600000L
+      val random = (0 until 10).map { k =>
+        base += (if (k == 6) 30 else 3 + rnd.nextInt(3)) * 3600000L
+        (0 until 40).map { i =>
+          val t = base + (rnd.nextInt(270) - 30) * 60000L + 7
+          val last = rnd.nextInt(4) match { case 0 => "home"; case 1 => ""; case _ => null }
+          LogEvent(s"m${rnd.nextInt(5)}", s"p${k}_$i", last, "1", ts(t))
+        }
+      }
+      val randomWant = uvModel(random, 1000L)
+      assert(randomWant.size > 10)
+      assert(uvRun("uv_eq_random", random) === randomWant)
+    })
+  }
+
+  test("F2 uniqueVisit registers at most one timer per (mid, day) of a batch") {
+    withoutTimerWarnings(withRocksDb {
+      val s = spark
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
+      val day1 = 1700000000000L
+      val day2 = day1 + 86400000L
+      // N = 100 entries at distinct timestamps over M = 4 (mid, day) pairs,
+      // plus 5 non-entries
+      val evs =
+        (0 until 30).map(i => LogEvent("a", "home", null, "1", ts(day1 + i * 11L))) ++
+        (0 until 30).map(i => LogEvent("a", "home", "", "1", ts(day2 + i * 11L))) ++
+        (0 until 25).map(i => LogEvent("b", "home", null, "1", ts(day1 + i * 13L))) ++
+        (0 until 15).map(i => LogEvent("c", "home", null, "1", ts(day2 + i * 17L))) ++
+        (0 until 5).map(i => LogEvent("c", "list", "home", "1", ts(day2 + i * 19L)))
+      val input = MemoryStream[LogEvent]
+      input.addData(evs: _*)
+      val q = StatefulOps.uniqueVisit(input.toDS().withWatermark("ts", "1 second"))
+        .writeStream.format("memory").queryName("uv_timers")
+        .outputMode(OutputMode.Append).start()
+      try {
+        q.processAllAvailable()
+        // the data batch; the no-data batch after it fires the timers
+        val data = q.recentProgress.find(_.numInputRows == evs.length).get
+        val registered = data.stateOperators.head.customMetrics
+          .get("numRegisteredTimers").longValue
+        assert(registered > 0 && registered <= 4,
+          s"$registered timers registered for 4 (mid, day) pairs")
       } finally q.stop()
     })
   }
